@@ -38,10 +38,9 @@ skips committed jobs (the anti-join is on the lineage table).
 
 from __future__ import annotations
 
-import os
-import sys
+import shutil
 import time
-from typing import Dict, Iterator, List, Optional
+from typing import Callable, List, Optional
 
 import numpy as np
 import pandas as pd
@@ -50,10 +49,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..analysis.analyzers import Analyzer, AnalyzerRegistry, parse_analysis_settings
-from .codec import (BUCKET_SHIFT, LOCAL_MASK, SEGMENT_BITS, encode_block,
+from .codec import (BUCKET_SHIFT, LOCAL_MASK, SEGMENT_BITS,
                     varbyte_encode_offsets)
-from .layout import (IndexConfig, IndexLayout, qname, term_bucket,
-                     term_bucket_col)
+from .layout import (IndexConfig, IndexLayout, qname, term_bucket_col,
+                     write_small_table)
 
 POSTINGS_SCHEMA = T.StructType([
     T.StructField("field", T.StringType()),
@@ -186,91 +185,24 @@ def assign_doc_ids(docs: DataFrame, key_col: str, n_buckets: int,
             .drop("_ord"))
 
 
-def _encode_partitions(tbuckets: int, pre_counted: bool = False):
-    """mapInPandas body: encode sorted (field, term, segment, doc_id)
-    runs into posting blocks, carrying group tails across Arrow
-    batches (a group may straddle batch boundaries).
-
-    ``pre_counted=False`` (build): rows are raw token occurrences —
-    duplicate doc_ids within a group ARE the term frequency, counted
-    here with one ``np.unique`` per group (group-at-a-time map-side
-    combine; raw occurrences never re-shuffle).
-    ``pre_counted=True`` (merge): rows carry an explicit ``tf``.
-    """
-
-    def _encode_groups(pdf: pd.DataFrame) -> pd.DataFrame:
-        f = pdf["field"].to_numpy(dtype=object)
-        t = pdf["term"].to_numpy(dtype=object)
-        s = pdf["segment"].to_numpy(dtype=np.int64)
-        doc = pdf["doc_id"].to_numpy(dtype=np.int64)
-        tf_col = (pdf["tf"].to_numpy(dtype=np.int64)
-                  if pre_counted else None)
-        lb = pdf["len_byte"].to_numpy(dtype=np.int64)
-        n = len(pdf)
-        change = np.empty(n, dtype=bool)
-        change[0] = True
-        change[1:] = (f[1:] != f[:-1]) | (t[1:] != t[:-1]) | (s[1:] != s[:-1])
-        starts = np.nonzero(change)[0]
-        ends = np.append(starts[1:], n)
-        rows = []
-        for st, en in zip(starts, ends):
-            if pre_counted:
-                udoc, tf, ulb = doc[st:en], tf_col[st:en], lb[st:en]
-            else:
-                udoc, idx, tf = np.unique(doc[st:en], return_index=True,
-                                          return_counts=True)
-                ulb = lb[st:en][idx]
-            doc_b, tf_b, len_b = encode_block(udoc, tf, ulb)
-            rows.append((
-                f[st], t[st], int(s[st]), term_bucket(t[st], tbuckets),
-                len(udoc), int(tf.sum()), int(tf.max()),
-                int(ulb.min()), doc_b, tf_b, len_b,
-            ))
-        return pd.DataFrame(rows, columns=[x.name for x in POSTINGS_SCHEMA])
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: Optional[pd.DataFrame] = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            lf = pdf["field"].iat[-1]
-            lt = pdf["term"].iat[-1]
-            ls = pdf["segment"].iat[-1]
-            not_last = ((pdf["field"].to_numpy(dtype=object) != lf)
-                        | (pdf["term"].to_numpy(dtype=object) != lt)
-                        | (pdf["segment"].to_numpy() != ls))
-            idx = np.nonzero(not_last)[0]
-            cut = int(idx[-1]) + 1 if idx.size else 0
-            carry = pdf.iloc[cut:].reset_index(drop=True)
-            head = pdf.iloc[:cut]
-            if len(head):
-                yield _encode_groups(head)
-        if carry is not None and len(carry):
-            yield _encode_groups(carry)
-
-    return _run
-
-
 def _encode_partitions_arrow(field_names: List[str]):
-    """mapInArrow encoder for the build path: zero pandas, zero
-    per-row Python objects, no per-group Python loop.
+    """mapInArrow posting encoder of ``write_job`` (build, ingest and
+    merge): zero pandas, zero per-row Python objects, no per-group
+    Python loop.
 
     Input partitions arrive sorted by (tbucket, field_ord, term,
     segment, doc_id) with JVM-computed ``tbucket`` and ``gkey =
     xxhash64(field_ord, term, segment)``; group (= posting block)
-    boundaries are int64 comparisons in numpy (C speed).  Duplicate
-    doc_id rows within a group ARE the term frequency (run-length —
-    the input sort makes them adjacent).  Because the input is
-    tbucket-then-term sorted, the OUTPUT blocks stream out already
-    clustered for the ``partitionBy(tbucket)`` layout write — the
-    build needs exactly ONE shuffle end to end.  ``field_names`` maps
-    the shuffled field ordinal back to the field name.  Collision
-    note: a boundary is missed only if two *adjacent* distinct keys
-    share an xxhash64 — ~2^-64 per boundary, negligible at any
-    corpus size.
+    boundaries are int64 comparisons in numpy (C speed).  Each row is
+    one posting with its ``tf`` already counted (map-side in the
+    build, decoded from the source blocks in a merge).  Because the
+    input is tbucket-then-term sorted, the OUTPUT blocks stream out
+    already clustered for the ``partitionBy(tbucket)`` layout write —
+    a segment write needs exactly ONE shuffle end to end.
+    ``field_names`` maps the shuffled field ordinal back to the field
+    name.  Collision note: a boundary is missed only if two *adjacent*
+    distinct keys share an xxhash64 — ~2^-64 per boundary, negligible
+    at any corpus size.
     """
     import pyarrow as pa
 
@@ -290,29 +222,17 @@ def _encode_partitions_arrow(field_names: List[str]):
 
         gk = tbl.column("gkey").to_numpy()
         doc = tbl.column("doc_id").to_numpy()
-        lb0 = tbl.column("len_byte").to_numpy()
-        tf0 = tbl.column("tf").to_numpy().astype(np.int64)
+        lb = tbl.column("len_byte").to_numpy()
+        tf = tbl.column("tf").to_numpy().astype(np.int64)
         n = len(gk)
-        # group (= block) boundaries: gkey change points.  Rows arrive
-        # doc_id-sorted per group; duplicate (group, doc) rows merge
-        # here by SUMMING tf (run-length over the sort) — correct for
-        # both raw occurrence rows (tf=1 each) and map-side
-        # pre-counted rows (no duplicates).
+        # group (= block) boundaries: gkey change points.  Rows are
+        # pre-counted postings (one per group and doc), doc_id-sorted
+        # per group.
         change = np.empty(n, dtype=bool)
         change[0] = True
         np.not_equal(gk[1:], gk[:-1], out=change[1:])
-        new_post = change.copy()
-        new_post[1:] |= doc[1:] != doc[:-1]
-        p_starts = np.nonzero(new_post)[0]            # row idx per posting
-        if p_starts.size == n:                        # no duplicates
-            tf, lb = tf0, lb0
-        else:
-            tf = np.add.reduceat(tf0, p_starts)
-            lb = lb0[p_starts]
-            doc = doc[p_starts]
-        gp_starts = np.nonzero(change[p_starts])[0]   # posting idx per group
-        row_starts = p_starts[gp_starts]              # row idx per group
-        df_block = np.diff(np.append(gp_starts, len(p_starts)))
+        gp_starts = np.nonzero(change)[0]             # row idx per group
+        df_block = np.diff(np.append(gp_starts, n))
         sum_tf = np.add.reduceat(tf, gp_starts)
         max_tf = np.maximum.reduceat(tf, gp_starts)
         min_len = np.minimum.reduceat(lb, gp_starts)
@@ -330,12 +250,12 @@ def _encode_partitions_arrow(field_names: List[str]):
         len_u8 = np.clip(lb, 0, 255).astype(np.uint8)
         doc_mem, tf_mem, len_mem = (doc_buf.tobytes(), tf_buf.tobytes(),
                                     len_u8.tobytes())
-        gp_ends = np.append(gp_starts[1:], len(p_starts))
+        gp_ends = np.append(gp_starts[1:], n)
         d_lo, d_hi = doc_off[gp_starts], doc_off[gp_ends]
         t_lo, t_hi = tf_off[gp_starts], tf_off[gp_ends]
-        take = pa.array(row_starts)
+        take = pa.array(gp_starts)
         fnames = np.asarray(field_names, dtype=object)
-        ords = tbl.column("field_ord").to_numpy()[row_starts]
+        ords = tbl.column("field_ord").to_numpy()[gp_starts]
         yield pa.RecordBatch.from_arrays([
             pa.array(fnames[ords], type=pa.string()),
             _arr("term").take(take),
@@ -375,13 +295,14 @@ def _encode_partitions_arrow(field_names: List[str]):
 
 
 def _posting_rows(ids: DataFrame, config: IndexConfig,
-                  registry: AnalyzerRegistry,
-                  precount: bool = True) -> DataFrame:
-    """Raw (field_ord, term, doc_id, len_byte) occurrence rows,
-    unioned over fields.  Length quantization runs as a native SQL
-    expression (agrees exactly with the f32 reference quantization
-    over the whole realistic range — validated in tests); the explode
-    and everything after it is JVM-side whole-stage codegen.
+                  registry: AnalyzerRegistry) -> DataFrame:
+    """Analyzed, pre-counted (field_ord, term, doc_id, len_byte, tf)
+    rows, unioned over fields — the build's and the streaming
+    ingester's postings input to ``write_job``.  Length quantization
+    runs as a native SQL expression (agrees exactly with the f32
+    reference quantization over the whole realistic range — validated
+    in tests); the explode and everything after it is JVM-side
+    whole-stage codegen.
 
     The field rides as a small ordinal (position in
     ``config.fields``), not a string: these rows feed the build's big
@@ -474,65 +395,11 @@ def _posting_rows(ids: DataFrame, config: IndexConfig,
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    if precount:
-        # map-side combine: partial agg dedups (doc, term) before the
-        # exchange (×2.3 fewer shuffled rows on web text); len_byte is
-        # constant per (doc, field) so it rides as a group key free
-        return (out.groupBy("field_ord", "term", "doc_id", "len_byte")
-                .agg(F.count(F.lit(1)).cast("int").alias("tf")))
-    # raw occurrences: the encoder run-length-merges duplicates after
-    # the sort — no hash-aggregation state anywhere in the build (the
-    # agg's random-access hash table is the one non-streaming memory
-    # pattern, and it is the first thing to stop scaling when cores
-    # share a memory subsystem)
-    return out.withColumn("tf", F.lit(1))
-
-
-def _field_stats(spark: SparkSession, ids: Optional[DataFrame],
-                 term_dict_dir: str, config: IndexConfig,
-                 doc_counts: Optional[Dict[str, int]] = None) -> List[dict]:
-    """Per-field (total_docs, total_tokens) — the reference's global
-    ``ftdoc``/``fttok`` statistics (segment_builder.rs:91-117 summed
-    across segments per rocksdb/search/statistics.rs:33-78).
-
-    ``total_docs`` = docs where the field is present.  The build path
-    passes it in via ``doc_counts`` — collected for free by an
-    ``observe()`` on the docs-write job (no extra scan/job); the
-    merge path passes ``ids`` and pays one columnar count over all
-    fields at once.  ``total_tokens`` and the lineage block count
-    come from the already-aggregated term_dict sidecar
-    (``sum(sum_tf)`` / ``sum(n_blocks)`` per field) — the postings
-    metadata is never re-scanned.  Returns ``(stats_rows, n_blocks)``.
-    """
-    if doc_counts is None:
-        row = ids.agg(*[F.count(F.col(qname(f))).alias(f"f{i}")
-                        for i, f in enumerate(config.fields)]).collect()[0]
-        doc_counts = {f: int(row[f"f{i}"])
-                      for i, f in enumerate(config.fields)}
-    tok_rows = (spark.read.parquet(term_dict_dir)
-                .groupBy("field").agg(F.sum("sum_tf").alias("t"),
-                                      F.sum("n_blocks").alias("b")).collect())
-    tok = {r.field: int(r.t) for r in tok_rows}
-    n_blocks = sum(int(r.b) for r in tok_rows)
-    return [{"field": f, "total_docs": int(doc_counts[f]),
-             "total_tokens": tok.get(f, 0)} for f in config.fields], n_blocks
-
-
-def _write_field_stats(path: str, stats_rows: List[dict]) -> None:
-    """field_stats sidecar: a handful of driver-resident rows —
-    written without a Spark job (see layout.write_small_table)."""
-    import shutil
-
-    import pyarrow as pa
-
-    from .layout import write_small_table
-    shutil.rmtree(path, ignore_errors=True)
-    write_small_table(
-        path, [{"field": r["field"], "total_docs": r["total_docs"],
-                "total_tokens": r["total_tokens"]} for r in stats_rows],
-        schema=pa.schema([("field", pa.string()),
-                          ("total_docs", pa.int64()),
-                          ("total_tokens", pa.int64())]))
+    # map-side combine: partial agg dedups (doc, term) before the
+    # exchange (×2.3 fewer shuffled rows on web text); len_byte is
+    # constant per (doc, field) so it rides as a group key free
+    return (out.groupBy("field_ord", "term", "doc_id", "len_byte")
+            .agg(F.count(F.lit(1)).cast("int").alias("tf")))
 
 
 def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
@@ -584,8 +451,6 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
             config.nested_colocated = True
         layout.write_config(config)
     buckets_per_job = -(-config.n_buckets // jobs)  # ceil
-    shuffle_p = (config.shuffle_partitions
-                 or int(spark.conf.get("spark.sql.shuffle.partitions")))
 
     with_bucket = assign_doc_ids(docs, config.key_col, config.n_buckets)
 
@@ -597,7 +462,8 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
         # only its own bucket range, not the whole corpus
         ids = with_bucket.where(
             (F.col("_bucket") >= lo) & (F.col("_bucket") < hi)).drop("_bucket")
-        return write_job(spark, ids, layout, config, registry, job,
+        return write_job(spark, ids, layout, config, job,
+                         lambda docs: _posting_rows(docs, config, registry),
                          extra={"bucket_lo": lo, "bucket_hi": hi})
 
     pending = [j for j in range(jobs) if j not in done]
@@ -626,25 +492,23 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
 
 
 def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
-              config: IndexConfig, registry: AnalyzerRegistry, job: int,
+              config: IndexConfig, job: int,
+              posting_rows: Callable[[DataFrame], DataFrame],
               extra: Optional[dict] = None) -> dict:
-    """Write one job's docs/postings/field_stats + the atomic lineage
-    commit.  ``ids`` must already carry a globally-unique ``doc_id``.
-    Shared by the batch builder and the streaming ingester."""
+    """Write one job's docs/doc_index/postings/term_dict/field_stats +
+    the atomic lineage commit — the ONE segment-write path, shared by
+    the batch builder, the streaming ingester and the merge.
+
+    ``ids`` must already carry a globally-unique ``doc_id``.
+    ``posting_rows`` maps the written docs table to pre-counted
+    ``(field_ord, term, doc_id, len_byte, tf)`` rows, at most one per
+    (field, term, doc): build and ingest analyze the docs
+    (:func:`_posting_rows`); merge ignores them and hands in the rows
+    decoded from its source blocks."""
     layout.clear_incomplete_job(job)
     t0 = time.monotonic()
     shuffle_p = (config.shuffle_partitions
                  or int(spark.conf.get("spark.sql.shuffle.partitions")))
-
-    _trace_on = os.environ.get("SPARK_GRAFT_TIMING")
-    _last = [time.monotonic()]
-
-    def _trace(step: str) -> None:
-        if _trace_on:
-            now = time.monotonic()
-            print(f"[build-trace] job={job} {step}: {now - _last[0]:.1f}s",
-                  file=sys.stderr, flush=True)
-            _last[0] = now
 
     # docs table first; re-read it so the id computation runs once and
     # downstream stages read a pruned columnar scan.  The row count and
@@ -652,6 +516,7 @@ def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
     # job as observe() metrics — zero extra jobs/scans for stats (the
     # previous count() + field-agg jobs were a measurable slice of the
     # build's Amdahl-serial share at high parallelism).
+    import pyarrow as pa
     from pyspark.sql import Observation
     obs = Observation(f"build_job_{job}")
     doc_cols = ["doc_id", config.key_col] + [
@@ -667,7 +532,6 @@ def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
     metrics = obs.get
     n_docs = int(metrics["__n_docs"])
     doc_counts = {f: int(metrics[a]) for f, a in field_alias.items()}
-    _trace("docs_write")
     ids = spark.read.parquet(layout.job_dir("docs", job))
 
     # PK sidecar: (key, doc_id) bucketed by a global key hash, so
@@ -704,12 +568,10 @@ def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
     # segment/tbucket/gkey are derived columns computed AFTER the
     # exchange (the repartition hashes the segment *expression*), so
     # the shuffled row stays minimal: (field_ord, term, doc_id,
-    # len_byte) — every extra Tungsten field is 8 aligned bytes on
+    # len_byte, tf) — every extra Tungsten field is 8 aligned bytes on
     # the build's only wide shuffle.
     try:
-        flat = _posting_rows(ids, config, registry,
-                             precount=config.precount)
-        (flat
+        (posting_rows(ids)
          .repartition(shuffle_p, "field_ord", "term",
                       F.shiftrightunsigned("doc_id", SEGMENT_BITS))
          .withColumn("segment", F.shiftrightunsigned("doc_id", SEGMENT_BITS))
@@ -722,7 +584,6 @@ def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
                      schema=POSTINGS_SCHEMA)
          .write.mode("overwrite").partitionBy("tbucket")
          .parquet(layout.job_dir("postings", job)))
-        _trace("postings_write")
 
         # term-dictionary sidecar (term_dictionary.rs:78-85 analogue):
         # one narrow agg of the job's block metadata → (field, term,
@@ -756,19 +617,22 @@ def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
             pass
         raise
     _join_sidecar()            # doc_index must be on disk pre-commit
-    _trace("doc_index_join")
     tok_m = tok_obs.get
     n_blocks = int(tok_m["__n_blocks"] or 0)
-    stats_rows = [{"field": f, "total_docs": doc_counts[f],
-                   "total_tokens": int(tok_m[a] or 0)}
-                  for f, a in tok_alias.items()]
-    _trace("term_dict")
 
     # field stats: both halves were observed on jobs that already ran
     # (doc counts on the docs write, token totals on the term_dict
-    # write) — zero extra jobs, zero extra scans
-    _write_field_stats(layout.job_dir("field_stats", job), stats_rows)
-    _trace("field_stats")
+    # write) — zero extra jobs, zero extra scans; the handful of rows
+    # is written without a Spark job (layout.write_small_table)
+    stats_dir = layout.job_dir("field_stats", job)
+    shutil.rmtree(stats_dir, ignore_errors=True)
+    write_small_table(
+        stats_dir, [{"field": f, "total_docs": doc_counts[f],
+                     "total_tokens": int(tok_m[a] or 0)}
+                    for f, a in tok_alias.items()],
+        schema=pa.schema([("field", pa.string()),
+                          ("total_docs", pa.int64()),
+                          ("total_tokens", pa.int64())]))
 
     row = {
         "job": job,

@@ -9,7 +9,8 @@ term frequencies and raw one-byte quantized doc lengths, grouped into
 analogue of the reference's 65,536-doc segment,
 /root/reference/src/search/document.rs:10).
 
-Everything here runs inside Arrow-batched pandas UDFs on executors;
+Everything here runs inside Arrow-batched UDFs on executors (build
+encode, merge decode, query decode) or on the driver's serving tier;
 no per-row Python at the Spark level.
 """
 
@@ -192,6 +193,59 @@ def decode_blocks_concat(segments: np.ndarray,
                 << SEGMENT_BITS)
     doc_ids = np.repeat(seg_base, counts) + local
     return doc_ids, tfs.astype(np.int64), lens, counts
+
+
+def concat_binary(col):
+    """(uint8 buffer, int64 offsets) view of a (large_)binary
+    ``pa.ChunkedArray``: the per-row byte strings laid end to end,
+    zero-copy per chunk — the input shape :func:`decode_blocks_concat`
+    wants."""
+    import pyarrow.types as pat
+    parts = []
+    lens = []
+    for chunk in col.chunks:
+        if len(chunk) == 0:
+            continue
+        off_dt = (np.int64 if pat.is_large_binary(chunk.type)
+                  else np.int32)
+        offs = np.frombuffer(chunk.buffers()[1], dtype=off_dt)[
+            chunk.offset:chunk.offset + len(chunk) + 1].astype(np.int64)
+        data = np.frombuffer(chunk.buffers()[2] or b"", dtype=np.uint8)
+        parts.append(data[offs[0]:offs[-1]])
+        lens.append(np.diff(offs))
+    if not parts:
+        return np.zeros(0, np.uint8), np.zeros(1, np.int64)
+    buf = np.concatenate(parts)
+    ln = np.concatenate(lens)
+    offsets = np.zeros(ln.size + 1, np.int64)
+    np.cumsum(ln, out=offsets[1:])
+    return buf, offsets
+
+
+def batch_decode(rb, docs_only: bool = False):
+    """One vectorized decode of every posting block in an Arrow
+    ``RecordBatch`` with ``segment`` / ``doc_bytes`` / ``tf_bytes`` /
+    ``len_bytes`` columns — shared by the query engine's decode UDFs
+    and the merge's posting decode.
+
+    Returns ``(doc_ids, tfs, lens, counts)`` — ``counts[i]`` postings
+    belong to block row ``i`` of the batch, laid out in row order.
+    ``docs_only`` skips the tf/len streams (the score-elided docset
+    path decodes just doc ids)."""
+    import pyarrow as pa
+
+    segs = rb.column("segment").to_numpy(zero_copy_only=False)
+    doc_buf, doc_off = concat_binary(
+        pa.chunked_array([rb.column("doc_bytes")]))
+    if docs_only:
+        doc_ids, counts = decode_docids_concat(segs, doc_buf, doc_off)
+        return doc_ids, None, None, counts
+    tf_buf, tf_off = concat_binary(
+        pa.chunked_array([rb.column("tf_bytes")]))
+    len_buf, len_off = concat_binary(
+        pa.chunked_array([rb.column("len_bytes")]))
+    return decode_blocks_concat(segs, doc_buf, doc_off,
+                                tf_buf, tf_off, len_buf, len_off)
 
 
 def encode_block(doc_ids: np.ndarray, tfs: np.ndarray, len_bytes: np.ndarray):

@@ -141,6 +141,19 @@ def lookup_key_driver(layout: IndexLayout, config: IndexConfig,
     import pyarrow.dataset as ds
     if not _sidecar_complete(layout, jobs):
         return None
+    # key type first: the kbucket below is the STRING hash, so a
+    # non-string key column must go to Spark even when that bucket
+    # dir is absent from every job
+    for j in jobs:
+        if not os.path.isdir(layout.job_dir("doc_index", j)):
+            continue
+        schema = ds.dataset(layout.job_dir("doc_index", j),
+                            format="parquet").schema
+        if config.key_col in schema.names:       # skip empty sidecars
+            if str(schema.field(config.key_col).type) not in (
+                    "string", "large_string"):
+                return None
+            break
     bucket = xxhash64_str(key) % config.kbuckets
     out = []
     for j in jobs:
@@ -149,9 +162,6 @@ def lookup_key_driver(layout: IndexLayout, config: IndexConfig,
         if not os.path.isdir(part):
             continue
         d = ds.dataset(part, format="parquet")
-        ktype = d.schema.field(config.key_col).type
-        if not (str(ktype) in ("string", "large_string")):
-            return None
         tbl = d.to_table(filter=ds.field(config.key_col) == key,
                          columns=["doc_id"])
         out.extend((j, int(x)) for x in tbl.column("doc_id").to_pylist())

@@ -67,10 +67,6 @@ class IndexConfig:
     #: both sides
     search_analyzers: Dict[str, str] = field(default_factory=dict)
     stored: List[str] = field(default_factory=list)
-    #: map-side tf pre-count (partial hash agg) before the shuffle;
-    #: False = ship raw occurrences and run-length-merge in the
-    #: encoder after the sort (no hash-agg state in the whole build)
-    precount: bool = True
     n_buckets: int = 32          # url-hash buckets (doc-id namespace)
     tbuckets: int = 8            # term-hash partition dirs of `postings`
     #: key-hash partition dirs of the `doc_index` PK sidecar.  Unlike
@@ -106,7 +102,12 @@ class IndexConfig:
 
     @staticmethod
     def from_json(text: str) -> "IndexConfig":
-        return IndexConfig(**json.loads(text))
+        d = json.loads(text)
+        # configs persisted while the map-side tf pre-count was a
+        # build option carry a "precount" key; it no longer configures
+        # anything (the pre-count is unconditional)
+        d.pop("precount", None)
+        return IndexConfig(**d)
 
 
 def write_small_table(path: str, rows: List[dict], schema=None) -> None:
@@ -152,10 +153,6 @@ def term_bucket_col(term_col, tbuckets: int):
         F.conv(F.substring(F.md5(term_col.cast("binary")), 1, 8), 16, 10)
         .cast("long"),
         F.lit(tbuckets)).cast("int")
-
-
-def url_bucket_bytes(key: str) -> bytes:
-    return hashlib.md5(key.encode("utf-8", "surrogatepass")).digest()
 
 
 class IndexLayout:

@@ -1,18 +1,25 @@
 """Job/segment compaction — the reference's segment merge
 (/root/reference/src/search/backends/rocksdb/segment_ops.rs:36-289)
-re-expressed as one shuffle.
+re-expressed over the build's own segment-write path.
 
 Incremental ingest leaves one job directory per batch (the analogue of
 the reference's many small segments); ``merge_jobs`` rewrites N job
 directories into one, preserving the logical index exactly — doc_ids
 are never remapped (they are already globally unique and dense per
 bucket), so unlike the reference's merge (which repacks u16 local id
-spaces, segment_ops.rs:240-268) ours is a pure re-grouping:
+spaces, segment_ops.rs:240-268) ours is a pure re-grouping of the
+stored postings:
 
-    decode blocks → rows → shuffle on (field, term, segment) → re-encode
+    decode blocks (one mapInArrow) → build.write_job
 
-Two-phase like the reference (segment_ops.rs:216-235): all data tables
-are written into the target first, the lineage commit row last.
+Like the reference, which re-groups postings through the same
+segment builder, the merge writes through the build's
+``write_job``: the same docs/doc_index/postings/term_dict/field_stats
+writes, the same single postings shuffle and encoder, the same
+``observe()`` statistics.  It never re-analyzes text, so it does not
+depend on the analyzer.  Two-phase like the reference
+(segment_ops.rs:216-235): all data tables are written into the target
+first, the lineage commit row last.
 
 ``maintenance`` is the merge-policy loop (src/index/maintenance.rs:7-82
 analogue): compact when the job count exceeds a threshold.
@@ -23,55 +30,56 @@ from __future__ import annotations
 import os
 import shutil
 import time
-from typing import Dict, Iterator, List, Optional
+from typing import Dict, List, Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from .build import (POSTINGS_SCHEMA, _encode_partitions, _field_stats,
-                    _write_field_stats)
-from .codec import decode_block
-from .layout import IndexConfig, IndexLayout
+from .build import write_job
+from .codec import batch_decode
+from .layout import IndexLayout
 
-_ROWS_SCHEMA = ("field string, term string, segment long, doc_id long, "
-                "tf int, len_byte int")
+_ROWS_DDL = ("field_ord int, term string, doc_id long, len_byte int, "
+             "tf int")
 
 
-def _decode_to_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        fields: List[np.ndarray] = []
-        terms: List[np.ndarray] = []
-        segs: List[np.ndarray] = []
-        ids: List[np.ndarray] = []
-        tfs: List[np.ndarray] = []
-        lens: List[np.ndarray] = []
-        for row in pdf.itertuples(index=False):
-            doc_ids, tf, lb = decode_block(
-                row.segment, row.doc_bytes, row.tf_bytes, row.len_bytes)
-            n = len(doc_ids)
-            fields.append(np.full(n, row.field, dtype=object))
-            terms.append(np.full(n, row.term, dtype=object))
-            segs.append(np.full(n, row.segment, dtype=np.int64))
-            ids.append(doc_ids)
-            tfs.append(tf)
-            lens.append(lb)
-        if ids:
-            yield pd.DataFrame({
-                "field": np.concatenate(fields),
-                "term": np.concatenate(terms),
-                "segment": np.concatenate(segs),
-                "doc_id": np.concatenate(ids),
-                "tf": np.concatenate(tfs).astype(np.int32),
-                "len_byte": np.concatenate(lens).astype(np.int32),
-            })
+def _decode_postings(field_names: List[str]):
+    """mapInArrow body: posting blocks → one pre-counted
+    ``(field_ord, term, doc_id, len_byte, tf)`` row per posting — the
+    rows ``write_job`` encodes.  Every block of a batch decodes in one
+    numpy pass (codec.batch_decode); field names map to their ordinal
+    in ``config.fields``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    names = pa.array(field_names, type=pa.string())
+
+    def _run(batches):
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            doc_ids, tfs, lens, counts = batch_decode(rb)
+            ords = pc.index_in(rb.column("field"), value_set=names)
+            if ords.null_count:
+                raise ValueError("posting field not in config.fields")
+            take = pa.array(np.repeat(np.arange(rb.num_rows), counts))
+            yield pa.RecordBatch.from_arrays([
+                ords.take(take),
+                rb.column("term").take(take),
+                pa.array(doc_ids, type=pa.int64()),
+                pa.array(lens.astype(np.int32)),
+                pa.array(tfs.astype(np.int32)),
+            ], names=["field_ord", "term", "doc_id", "len_byte", "tf"])
+
+    return _run
 
 
 def merge_jobs(spark: SparkSession, index_dir: str, out_dir: str,
                jobs: Optional[List[int]] = None) -> dict:
     """Compact ``jobs`` (default: all committed) of ``index_dir`` into
-    single-job ``out_dir``.  Logical index content is preserved."""
+    single-job ``out_dir``.  Logical index content is preserved;
+    deleted docs vanish and statistics are recomputed from the
+    survivors (segment_ops.rs:157-206 semantics)."""
     layout = IndexLayout(index_dir)
     config = layout.read_config()
     all_jobs = layout.completed_jobs(spark)
@@ -81,66 +89,22 @@ def merge_jobs(spark: SparkSession, index_dir: str, out_dir: str,
     out = IndexLayout(out_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
     out.write_config(config)
-    t0 = time.monotonic()
-    shuffle_p = (config.shuffle_partitions
-                 or int(spark.conf.get("spark.sql.shuffle.partitions")))
 
     from .delete import load_deletions
     deletions = load_deletions(spark, layout)
 
     docs = spark.read.option("basePath", layout.table("docs")).parquet(
         *[layout.job_dir("docs", j) for j in jobs]).drop("job")
+    rows = (spark.read.option("basePath", layout.table("postings"))
+            .parquet(*[layout.job_dir("postings", j) for j in jobs])
+            .select("field", "term", "segment", "doc_bytes", "tf_bytes",
+                    "len_bytes")
+            .mapInArrow(_decode_postings(list(config.fields)), _ROWS_DDL))
     if deletions is not None:
-        # physical cleanup: deleted docs vanish and statistics are
-        # recomputed from survivors (segment_ops.rs:157-206 semantics)
         docs = docs.join(deletions, "doc_id", "left_anti")
-    docs.write.mode("overwrite").parquet(out.job_dir("docs", 0))
-    n_docs = spark.read.parquet(out.job_dir("docs", 0)).count()
-
-    from .doc_index import write_doc_index
-    write_doc_index(spark.read.parquet(out.job_dir("docs", 0)),
-                    out, config, 0, shuffle_p, n_rows=n_docs)
-
-    blocks = spark.read.option("basePath", layout.table("postings")) \
-        .parquet(*[layout.job_dir("postings", j) for j in jobs])
-    rows = blocks.select("field", "term", "segment", "doc_bytes",
-                         "tf_bytes", "len_bytes") \
-        .mapInPandas(_decode_to_rows, schema=_ROWS_SCHEMA)
-    if deletions is not None:
         rows = rows.join(deletions, "doc_id", "left_anti")
-    merged = (rows
-              .repartition(shuffle_p, "field", "term", "segment")
-              .sortWithinPartitions("field", "term", "segment", "doc_id")
-              .mapInPandas(_encode_partitions(config.tbuckets,
-                                              pre_counted=True),
-                           schema=POSTINGS_SCHEMA))
-    (merged
-     .repartitionByRange(max(config.tbuckets, shuffle_p),
-                         "field", "term", "segment")
-     .sortWithinPartitions("tbucket", "field", "term", "segment")
-     .write.mode("overwrite").partitionBy("tbucket")
-     .parquet(out.job_dir("postings", 0)))
-
-    dict_src = spark.read.parquet(out.job_dir("postings", 0)) \
-        .groupBy("field", "term", "tbucket") \
-        .agg(F.sum("df_block").cast("long").alias("df"),
-             F.count("*").cast("int").alias("n_blocks"),
-             F.sum("sum_tf").cast("long").alias("sum_tf"))
-    (dict_src.repartition(max(1, shuffle_p // 4), "field", "term")
-     .sortWithinPartitions("field", "term")
-     .write.mode("overwrite").parquet(out.job_dir("term_dict", 0)))
-
-    ids = spark.read.parquet(out.job_dir("docs", 0))
-    stats, n_blocks = _field_stats(spark, ids,
-                                   out.job_dir("term_dict", 0), config)
-    _write_field_stats(out.job_dir("field_stats", 0), stats)
-
-    row = {"job": 0, "n_docs": n_docs, "n_posting_blocks": n_blocks,
-           "wall_sec": round(time.monotonic() - t0, 3), "status": "done",
-           "finished_unix": int(time.time()),
-           "merged_from": ",".join(str(j) for j in jobs)}
-    out.commit_job(spark, row)
-    return row
+    return write_job(spark, docs, out, config, 0, lambda _docs: rows,
+                     extra={"merged_from": ",".join(str(j) for j in jobs)})
 
 
 # the reference's size tiers (src/index/maintenance.rs:14-54):

@@ -37,18 +37,6 @@ class TermDictReader:
         self._cache: Dict[Tuple[str, str], Tuple[int, int]] = {}
         self._fragments = None          # lazy pyarrow dataset
 
-    @staticmethod
-    def sidecar_complete(layout: IndexLayout,
-                         jobs: Optional[List[int]] = None) -> bool:
-        """True iff every committed job with postings has a term_dict
-        (a mixed legacy index must fall back to metadata-scan paths)."""
-        if jobs is None:
-            jobs = layout.completed_jobs_local()
-        return bool(jobs) and all(
-            os.path.isdir(layout.job_dir("term_dict", j))
-            for j in jobs
-            if os.path.isdir(layout.job_dir("postings", j)))
-
     def _dataset(self):
         if self._fragments is None:
             import pyarrow.dataset as ds

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..analysis.analyzers import AnalyzerRegistry, parse_analysis_settings
-from ..index.codec import decode_blocks_concat
+from ..index.codec import batch_decode
 from ..index.layout import IndexConfig, IndexLayout, term_bucket
 from ..similarity import (bm25_f32, bm25_f64, lengths_from_bytes,
                           lengths_from_bytes_f64, tfidf_f32, tfidf_f64)
@@ -124,32 +124,6 @@ def editdist_leq(a: str, b: str, k: int) -> bool:
     return prev[-1] <= k
 
 
-def _batch_decode(rb, docs_only: bool = False):
-    """One vectorized decode of every posting block in an Arrow batch
-    (guide §4.2: hand whole batches to numpy instead of looping rows).
-
-    Returns ``(doc_ids, tfs, lens, counts)`` — ``counts[i]`` postings
-    belong to block row ``i`` of the batch, laid out in row order.
-    ``docs_only`` skips the tf/len streams (the score-elided docset
-    path decodes just doc ids)."""
-    import pyarrow as pa
-
-    from ..index.codec import decode_docids_concat
-    from .local import _concat_binary
-    segs = rb.column("segment").to_numpy(zero_copy_only=False)
-    doc_buf, doc_off = _concat_binary(
-        pa.chunked_array([rb.column("doc_bytes")]))
-    if docs_only:
-        doc_ids, counts = decode_docids_concat(segs, doc_buf, doc_off)
-        return doc_ids, None, None, counts
-    tf_buf, tf_off = _concat_binary(
-        pa.chunked_array([rb.column("tf_bytes")]))
-    len_buf, len_off = _concat_binary(
-        pa.chunked_array([rb.column("len_bytes")]))
-    return decode_blocks_concat(segs, doc_buf, doc_off,
-                                tf_buf, tf_off, len_buf, len_off)
-
-
 def _decode_score_fn(total_docs: int, total_tokens: int, similarity: str,
                      boost: float, needs_score: bool,
                      precision: str = "f32"):
@@ -170,7 +144,7 @@ def _decode_score_fn(total_docs: int, total_tokens: int, similarity: str,
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            doc_ids, tfs, lens, counts = _batch_decode(
+            doc_ids, tfs, lens, counts = batch_decode(
                 rb, docs_only=not needs_score)
             if not needs_score:
                 s = np.zeros(len(doc_ids), dtype=np.float64)
@@ -213,7 +187,7 @@ def _fused_decode_fn(similarity: str, precision: str):
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            doc_ids, tfs, lens, counts = _batch_decode(rb)
+            doc_ids, tfs, lens, counts = batch_decode(rb)
             child_b = rb.column("child").to_numpy(zero_copy_only=False)
             child = np.repeat(child_b.astype(np.int32), counts)
             dfg = np.repeat(
@@ -423,9 +397,6 @@ class SearchEngine:
         elif mode == "sharded":
             from .local import ShardedSearcher
             self._local = ShardedSearcher(index_dir, lazy=serving_lazy)
-
-    def _postings_bytes(self) -> int:
-        return sum(self._postings_bytes_per_job().values())
 
     def _postings_bytes_per_job(self) -> Dict[str, int]:
         import os as _os

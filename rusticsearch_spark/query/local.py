@@ -25,7 +25,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from ..index.codec import decode_blocks_concat
+from ..index.codec import concat_binary, decode_blocks_concat
 from ..index.layout import IndexConfig, IndexLayout
 from ..similarity import bm25_f32, lengths_from_bytes, tfidf_f32
 from ..analysis.analyzers import AnalyzerRegistry, parse_analysis_settings
@@ -73,32 +73,6 @@ def _ranges_to_indices(starts: np.ndarray,
     excl = np.cumsum(lengths) - lengths
     return (np.arange(total, dtype=np.int64)
             + np.repeat(starts - excl, lengths))
-
-
-def _concat_binary(col: "pa.ChunkedArray"):
-    """(uint8 buffer, int64 offsets) view of a (large_)binary column:
-    the per-row byte strings laid end to end, zero-copy per chunk —
-    the input shape ``codec.decode_blocks_concat`` wants."""
-    import pyarrow.types as pat
-    parts: List[np.ndarray] = []
-    lens: List[np.ndarray] = []
-    for chunk in col.chunks:
-        if len(chunk) == 0:
-            continue
-        off_dt = (np.int64 if pat.is_large_binary(chunk.type)
-                  else np.int32)
-        offs = np.frombuffer(chunk.buffers()[1], dtype=off_dt)[
-            chunk.offset:chunk.offset + len(chunk) + 1].astype(np.int64)
-        data = np.frombuffer(chunk.buffers()[2] or b"", dtype=np.uint8)
-        parts.append(data[offs[0]:offs[-1]])
-        lens.append(np.diff(offs))
-    if not parts:
-        return np.zeros(0, np.uint8), np.zeros(1, np.int64)
-    buf = np.concatenate(parts)
-    ln = np.concatenate(lens)
-    offsets = np.zeros(ln.size + 1, np.int64)
-    np.cumsum(ln, out=offsets[1:])
-    return buf, offsets
 
 
 class LocalSearcher:
@@ -195,7 +169,7 @@ class LocalSearcher:
             perm = np.lexsort((segs, codes))      # block rows only
             cols = []
             for name in ("doc_bytes", "tf_bytes", "len_bytes"):
-                buf, off = _concat_binary(tbl.column(name))
+                buf, off = concat_binary(tbl.column(name))
                 ln = np.diff(off)[perm]
                 pbuf = buf[_ranges_to_indices(off[perm], ln)]
                 poff = np.zeros(n_rows + 1, np.int64)

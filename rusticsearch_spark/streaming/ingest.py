@@ -25,7 +25,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..index.build import _registry, assign_doc_ids, write_job
+from ..index.build import (_posting_rows, _registry, assign_doc_ids,
+                           write_job)
 from ..index.layout import IndexConfig, IndexLayout
 
 STREAM_JOB_BASE = 100_000
@@ -129,8 +130,10 @@ class StreamingIngester:
         base = STREAM_BUCKET_BASE + int(batch_id) * self.n_buckets_per_batch
         ids = assign_doc_ids(batch_df, key, self.n_buckets_per_batch,
                              bucket_base=base).drop("_bucket")
-        write_job(self.spark, ids, self.layout, self.config, self.registry,
-                  job, extra={"batch_id": int(batch_id)})
+        write_job(self.spark, ids, self.layout, self.config, job,
+                  lambda docs: _posting_rows(docs, self.config,
+                                             self.registry),
+                  extra={"batch_id": int(batch_id)})
 
 
 def ingest_stream(spark: SparkSession, stream_df: DataFrame,

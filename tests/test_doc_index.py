@@ -242,3 +242,37 @@ def test_get_document_zero_spark_jobs(spark, webtext, tmp_path):
     assert after == before, "get_document launched a Spark job"
     assert missing is None
     assert got == want
+
+
+def test_get_document_nonstring_key_absent_string_bucket(spark, tmp_path):
+    """A GET on an integer-keyed index must find the document even
+    when the bucket its STRING spelling hashes to exists in no job:
+    the driver path cannot hash native-typed keys, so it has to hand
+    the lookup to the Spark scan instead of reporting "no such
+    document"."""
+    from rusticsearch_spark.cluster import Cluster
+    from rusticsearch_spark.index.doc_index import xxhash64_str
+    from rusticsearch_spark.index.layout import IndexLayout
+    c = Cluster(spark, str(tmp_path / "intkey_get"))
+    # the key stays an unmapped long column (a mapped "integer" field
+    # would be canonicalized to its string spelling)
+    c.create_index("p", {"properties": {"text": {"type": "string"}}},
+                   key_col="pk")
+    rows = [(pk, f"doc number {pk}") for pk in (3, 17, 40, 123)]
+    c.bulk("p", spark.createDataFrame(rows, "pk long, text string"),
+           key_col="pk", n_buckets=4, tbuckets=2, shuffle_partitions=4)
+    layout = IndexLayout(c._dir("p"))
+    kb = layout.read_config().kbuckets
+    present = set()
+    for j in layout.completed_jobs_local():
+        root = layout.job_dir("doc_index", j)
+        present |= {int(d.split("=", 1)[1]) for d in os.listdir(root)
+                    if d.startswith("kbucket=")}
+    absent = [pk for pk, _ in rows
+              if xxhash64_str(str(pk)) % kb not in present]
+    assert absent, "fixture needs a key whose string bucket is absent"
+    pk = absent[0]
+    for probe in (str(pk), pk):
+        doc = c.get_document("p", probe)
+        assert doc is not None and doc["pk"] == pk, probe
+    assert c.get_document("p", "999999") is None

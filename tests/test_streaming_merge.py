@@ -17,6 +17,8 @@ from rusticsearch_spark.index.merge import maintenance, merge_jobs
 from rusticsearch_spark.query.engine import SearchEngine
 from rusticsearch_spark.streaming.ingest import (StreamingIngester,
                                                  ingest_stream)
+# the 3-job nested-TYPE index fixture, shared with its own suite
+from test_nested_mapping import nested_multijob_index  # noqa: F401
 
 CFG = dict(key_col="url", fields={"text": "standard", "lang": None},
            n_buckets=4, tbuckets=2, shuffle_partitions=4)
@@ -195,3 +197,134 @@ def test_partial_merge_job_id_not_reused_and_crash_invisible(
                     layout.job_dir("postings", new_job + 7))
     assert SearchEngine(spark, work).count() == n_before
     assert LocalSearcher(work).count() == n_before
+
+
+# --- exact merge content ------------------------------------------------
+
+
+def _decoded_postings(layout, jobs):
+    """Every posting of ``jobs`` decoded block by block with the
+    reference codec: ``(postings Counter, block keys list)`` where a
+    posting is ``(field, term, doc_id, tf, len_byte)`` and a block key
+    is ``(field, term, segment)``."""
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    from rusticsearch_spark.index.codec import decode_block
+    postings, blocks = Counter(), []
+    for j in jobs:
+        t = pq.read_table(layout.job_dir("postings", j),
+                          columns=["field", "term", "segment", "doc_bytes",
+                                   "tf_bytes", "len_bytes"])
+        for r in t.to_pylist():
+            blocks.append((r["field"], r["term"], r["segment"]))
+            ids, tfs, lens = decode_block(r["segment"], r["doc_bytes"],
+                                          r["tf_bytes"], r["len_bytes"])
+            postings.update((r["field"], r["term"], int(d), int(tf), int(lb))
+                            for d, tf, lb in zip(ids, tfs, lens))
+    return postings, blocks
+
+
+def _assert_merge_exact(spark, src, out):
+    """The merged job holds exactly the surviving source content:
+    postings, term_dict, field_stats, lineage counts and docs."""
+    from collections import Counter, defaultdict
+    from operator import itemgetter
+
+    import pyarrow.parquet as pq
+
+    from rusticsearch_spark.index.codec import SEGMENT_BITS
+    from rusticsearch_spark.index.delete import load_deletions
+    src_l, out_l = IndexLayout(src), IndexLayout(out)
+    cfg = src_l.read_config()
+    jobs = [j for j in src_l.completed_jobs(spark)
+            if os.path.isdir(src_l.job_dir("docs", j))]
+    dels = load_deletions(spark, src_l)
+    deleted = ({r.doc_id for r in dels.collect()} if dels is not None
+               else set())
+
+    want, _ = _decoded_postings(src_l, jobs)
+    want = Counter({p: n for p, n in want.items() if p[2] not in deleted})
+    got, blocks = _decoded_postings(out_l, [0])
+    assert got == want
+    assert len(blocks) == len(set(blocks))     # one block per key
+    assert set(blocks) == {(f, t, d >> SEGMENT_BITS)
+                           for f, t, d, _, _ in want}
+
+    agg = defaultdict(lambda: [set(), 0])
+    for (f, t, d, tf, _), n in got.items():
+        agg[(f, t)][0].add(d)
+        agg[(f, t)][1] += tf * n
+    n_blocks = Counter((f, t) for f, t, _ in blocks)
+    td = pq.read_table(out_l.job_dir("term_dict", 0),
+                       columns=["field", "term", "df", "n_blocks",
+                                "sum_tf"]).to_pylist()
+    assert sorted((r["field"], r["term"], r["df"], r["n_blocks"],
+                   r["sum_tf"]) for r in td) == sorted(
+        (f, t, len(ds), n_blocks[(f, t)], s)
+        for (f, t), (ds, s) in agg.items())
+
+    docs = [r for j in jobs
+            for r in pq.read_table(src_l.job_dir("docs", j)).to_pylist()
+            if r["doc_id"] not in deleted]
+    merged_docs = pq.read_table(out_l.job_dir("docs", 0)).to_pylist()
+    assert sorted(merged_docs, key=itemgetter("doc_id")) == \
+        sorted(docs, key=itemgetter("doc_id"))
+    fs = {r["field"]: (r["total_docs"], r["total_tokens"]) for r in
+          pq.read_table(out_l.job_dir("field_stats", 0)).to_pylist()}
+    toks = Counter()
+    for (f, _, _, tf, _), n in got.items():
+        toks[f] += tf * n
+    assert fs == {f: (sum(r[f] is not None for r in docs), toks[f])
+                  for f in cfg.fields}
+    row = out_l.lineage(spark).where("status = 'done'").collect()
+    assert len(row) == 1
+    assert row[0].n_docs == len(docs)
+    assert row[0].n_posting_blocks == len(blocks)
+
+
+def test_merge_preserves_content_exactly(spark, stream_index, tmp_path):
+    """Decoded postings, term_dict, field_stats, lineage counts and
+    docs of a merge equal the surviving source content exactly —
+    with deleted docs removed physically."""
+    import shutil
+
+    from rusticsearch_spark.index.delete import delete_documents
+    work = str(tmp_path / "exact_idx")
+    shutil.copytree(stream_index, work)
+    victims = [h["key"] for h in
+               SearchEngine(spark, work).hits(QUERY, size=3)]
+    assert delete_documents(spark, work, keys=victims) == 3
+    out = str(tmp_path / "exact_out")
+    merge_jobs(spark, work, out)
+    _assert_merge_exact(spark, work, out)
+
+
+def test_merge_nested_index_preserves_content_and_queries(
+        spark, nested_multijob_index, tmp_path):
+    """A nested-TYPE index merges to the same content, and its nested
+    queries (inner_hits included) answer identically after the
+    merge."""
+    from test_nested_mapping import NESTED_QUERY_BATTERY
+
+    from rusticsearch_spark.query.local import LocalSearcher
+    out = str(tmp_path / "nested_merged")
+    merge_jobs(spark, nested_multijob_index, out)
+    _assert_merge_exact(spark, nested_multijob_index, out)
+    inner = {"nested": {"path": "comments",
+                        "query": {"term": {"comments.author": "alice"}},
+                        "inner_hits": {"size": 5}}}
+    before = SearchEngine(spark, nested_multijob_index, mode="spark")
+    after = SearchEngine(spark, out, mode="spark")
+    local = LocalSearcher(out)
+    for q in NESTED_QUERY_BATTERY:
+        want = [(r.doc_id, r.score) for r in
+                before.search(q, size=30).collect()]
+        assert [(r.doc_id, r.score) for r in
+                after.search(q, size=30).collect()] == want, q
+        assert [d for d, _ in local.search(q, size=30)] == \
+            [d for d, _ in want], q
+    hits = before.hits(inner, size=30)
+    assert hits and all(h["inner_hits"]["comments"] for h in hits)
+    assert after.hits(inner, size=30) == hits

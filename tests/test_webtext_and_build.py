@@ -167,3 +167,24 @@ def test_term_bucket_sql_parity(spark):
             .collect()}
         for t in set(terms):
             assert got[t] == term_bucket(t, tb), (t, tb)
+
+
+def test_legacy_precount_config_still_opens(spark, index_dir, tmp_path):
+    """Indexes persisted while the map-side tf pre-count was a config
+    option carry a "precount" key in config.json; they must still
+    open and answer the same."""
+    import json
+
+    from rusticsearch_spark.query.engine import SearchEngine
+    legacy = str(tmp_path / "legacy_precount")
+    shutil.copytree(index_dir, legacy)
+    layout = IndexLayout(legacy)
+    with open(layout.config_path) as f:
+        d = json.load(f)
+    d["precount"] = True
+    with open(layout.config_path, "w") as f:
+        json.dump(d, f)
+    assert layout.read_config() == IndexLayout(index_dir).read_config()
+    q = {"match": {"text": "spark query"}}
+    assert SearchEngine(spark, legacy).count(q) == \
+        SearchEngine(spark, index_dir).count(q)
