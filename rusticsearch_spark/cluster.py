@@ -211,10 +211,12 @@ class Cluster:
             filter=ds.field("doc_id") == doc_id)
         if tbl.num_rows == 0:      # torn sidecar — let Spark decide
             return NotImplemented
-        row = {c: tbl.column(c)[0].as_py() for c in tbl.column_names}
-        # match the Spark path's Row.asDict exactly: the basePath
-        # partition column rides along, and binary cells surface as
-        # bytearray
+        # match the Spark path's Row.asDict exactly: its columns are
+        # the union read's (a column this job's file lacks is None),
+        # the basePath partition column rides along, and binary cells
+        # surface as bytearray
+        row = {c: (tbl.column(c)[0].as_py() if c in tbl.column_names
+                   else None) for c in eng.docs.columns}
         row["job"] = job
         return {k: (bytearray(v) if isinstance(v, bytes) else v)
                 for k, v in row.items()}

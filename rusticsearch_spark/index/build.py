@@ -22,8 +22,7 @@ declarative Spark pipeline:
    ("the") appearing in every document splits into one group per
    65,536-doc segment, so no reducer ever sees more than 65,536
    postings for one key.  Groups are delta+varbyte encoded
-   (``index.codec``) with per-block ``(df_block, max_tf, min_len)``
-   block-max metadata for WAND pruning.
+   (``index.codec``) with per-block ``(df_block, sum_tf)`` metadata.
 4. **layout shuffle** — the (small, compressed) block table is
    range-partitioned by term and written under ``tbucket=`` Hive
    partitions sorted by term: queries prune by directory, then by
@@ -61,8 +60,6 @@ POSTINGS_SCHEMA = T.StructType([
     T.StructField("tbucket", T.IntegerType()),
     T.StructField("df_block", T.IntegerType()),
     T.StructField("sum_tf", T.LongType()),
-    T.StructField("max_tf", T.IntegerType()),
-    T.StructField("min_len", T.IntegerType()),
     T.StructField("doc_bytes", T.BinaryType()),
     T.StructField("tf_bytes", T.BinaryType()),
     T.StructField("len_bytes", T.BinaryType()),
@@ -210,7 +207,6 @@ def _encode_partitions_arrow(field_names: List[str]):
         ("field", pa.string()), ("term", pa.string()),
         ("segment", pa.int64()), ("tbucket", pa.int32()),
         ("df_block", pa.int32()), ("sum_tf", pa.int64()),
-        ("max_tf", pa.int32()), ("min_len", pa.int32()),
         ("doc_bytes", pa.binary()), ("tf_bytes", pa.binary()),
         ("len_bytes", pa.binary()),
     ])
@@ -234,8 +230,6 @@ def _encode_partitions_arrow(field_names: List[str]):
         gp_starts = np.nonzero(change)[0]             # row idx per group
         df_block = np.diff(np.append(gp_starts, n))
         sum_tf = np.add.reduceat(tf, gp_starts)
-        max_tf = np.maximum.reduceat(tf, gp_starts)
-        min_len = np.minimum.reduceat(lb, gp_starts)
         # delta-encode doc ids (absolute-local at each group start;
         # base = segment << SEGMENT_BITS == doc & ~LOCAL_MASK since a
         # group is single-segment) in ONE varbyte pass over all
@@ -263,8 +257,6 @@ def _encode_partitions_arrow(field_names: List[str]):
             _arr("tbucket").take(take),
             pa.array(df_block.astype(np.int32)),
             pa.array(sum_tf.astype(np.int64)),
-            pa.array(max_tf.astype(np.int32)),
-            pa.array(min_len.astype(np.int32)),
             pa.array([doc_mem[a:b] for a, b in zip(d_lo, d_hi)],
                      type=pa.binary()),
             pa.array([tf_mem[a:b] for a, b in zip(t_lo, t_hi)],

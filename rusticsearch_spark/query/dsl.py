@@ -197,23 +197,27 @@ def boost(q: Query, factor: float) -> Query:
     raise TypeError(type(q))
 
 
+def _collect_inner_hits(q: Query, out: List["Nested"]) -> None:
+    if isinstance(q, Nested):
+        if q.inner_hits is not None:
+            out.append(q)
+        _collect_inner_hits(q.query, out)
+    elif isinstance(q, (Conjunction, Disjunction, DisjunctionMax)):
+        for c in q.queries:
+            _collect_inner_hits(c, out)
+    elif isinstance(q, Filter):
+        _collect_inner_hits(q.query, out)
+        _collect_inner_hits(q.filter, out)
+    elif isinstance(q, Exclude):
+        _collect_inner_hits(q.query, out)
+        _collect_inner_hits(q.exclude, out)
+
+
 def inner_hits_nodes(q: Query) -> List["Nested"]:
     """Every Nested node in the tree with an inner_hits request, in
     depth-first order (hits() attaches one result set per node)."""
     out: List[Nested] = []
-    if isinstance(q, Nested):
-        if q.inner_hits is not None:
-            out.append(q)
-        out.extend(inner_hits_nodes(q.query))
-    elif isinstance(q, (Conjunction, Disjunction, DisjunctionMax)):
-        for c in q.queries:
-            out.extend(inner_hits_nodes(c))
-    elif isinstance(q, Filter):
-        out.extend(inner_hits_nodes(q.query))
-        out.extend(inner_hits_nodes(q.filter))
-    elif isinstance(q, Exclude):
-        out.extend(inner_hits_nodes(q.query))
-        out.extend(inner_hits_nodes(q.exclude))
+    _collect_inner_hits(q, out)
     names = [n.inner_hits[0] for n in out]
     if len(set(names)) != len(names):
         # ES rejects duplicate inner_hits names (the default name is

@@ -18,12 +18,6 @@ replacing the reference's two postfix stack machines
   tie-break (the reference leaves tie order unspecified,
   collectors/top_score.rs:49-110).
 
-Single-term top-k additionally runs **block-max WAND pruning**: pass 1
-decodes just enough highest-upper-bound blocks to cover k docs and
-establishes the true k-th score θ; pass 2 decodes only remaining
-blocks whose (max_tf, min_len) upper bound ≥ θ.  Pruning is provably
-answer-preserving — a skipped block's every doc scores < θ.
-
 Precision policy: per-term scores are exact f32 (numpy, matching the
 reference's Rust f32 math bit-for-bit); combinator sums/averages
 accumulate in float64 over those f32 values, so near-tie ranks may
@@ -33,12 +27,10 @@ differ from the reference by f32-accumulation order at ~1e-7 relative
 
 from __future__ import annotations
 
-import math
 import os
 from typing import Dict, Iterator, List, Optional, Tuple, Union
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -235,17 +227,6 @@ _FUSED_SCHEMA = T.StructType([
 class SearchEngine:
     """Read-side handle on one index directory."""
 
-    # Block-max pruning engages only when estimated decode cost
-    # dominates its extra driver round-trips: at least this many
-    # postings across the query's terms.  Below it, a toy/medium
-    # corpus full decode is one job and strictly cheaper.
-    PRUNE_MIN_POSTINGS = 100_000
-    # per-task-slot engage threshold for block-max pruning: below
-    # df ≈ 5M postings/slot, the vectorized cached decode is faster
-    # than the prune's extra sequential driver round-trips (measured
-    # A/B in _prune_threshold's docstring)
-    PRUNE_POSTINGS_PER_SLOT = 5_000_000
-
     #: "auto" serving mode switches to the driver-local searcher when
     #: the LARGEST PER-SHARD postings artifact (one build job = one
     #: document shard) is at most this many bytes on disk —
@@ -276,11 +257,6 @@ class SearchEngine:
         BENCH/APPENDIX_serving.md)."""
         self.spark = spark
         self.precision = precision
-        self.prune_min_postings = self.PRUNE_MIN_POSTINGS
-        # instrumentation for tests: did the last top-k call actually
-        # take the two-pass pruned path (vs the full-decode fallback)?
-        self._wand_pruned = False
-        self._fused_pruned = False
         self.layout = IndexLayout(index_dir)
         self.config: IndexConfig = self.layout.read_config()
         from ..analysis import ANALYSIS_VERSION
@@ -320,7 +296,7 @@ class SearchEngine:
         # driver-side dictionary reader (the reference's in-memory
         # TermDictionary, term_dictionary.rs:16-91): answers df /
         # n_blocks lookups from sorted-parquet row groups WITHOUT a
-        # Spark job — the pruning gate and decode df become free.
+        # Spark job — decode df and term counts become free.
         # Every dictionary consumer goes through this reader; no
         # Spark-side term_dict DataFrame is held (it would only pin
         # an unused table in executor memory in serving mode).
@@ -409,29 +385,6 @@ class SearchEngine:
             out[d] = total
         return out
 
-    def _prune_threshold(self, min_postings: int) -> int:
-        """Parallelism-aware WAND engage gate.  The work pruning
-        saves is the FULL decode, which spreads across every task
-        slot — wall cost ~ df/slots — while the probe pass it buys
-        costs two extra SEQUENTIAL driver round-trips regardless of
-        slots.  Measured on the 3.2M-doc bench artifact with cached
-        postings (same session, interleaved): full decode beats the
-        two-pass prune at EVERY level — term top-10 3.8 vs 11.3 s at
-        2 cores, 1.1-2.1 vs 6.7-7.9 s at 8, 0.7-2.1 vs 3.6-5.3 s at
-        32; match_or 9.8-13.1 vs 23-26 s at 2 cores.  Vectorized
-        in-memory decode runs ~10M postings/s/slot, so pruning only
-        pays in the IO-bound regime it was designed for: cold,
-        on-disk posting lists whose per-slot share is huge (the
-        100 TB shape — billions-of-postings terms read from object
-        storage).  Hence a per-slot threshold: engage only when the
-        per-slot decode share could dominate the ~3 driver
-        round-trips.  Setting prune_min_postings = 0 still forces
-        the gate open (the rank-identity parity tests)."""
-        if min_postings <= 0:
-            return 0
-        slots = max(1, self.spark.sparkContext.defaultParallelism)
-        return max(min_postings, self.PRUNE_POSTINGS_PER_SLOT * slots)
-
     def _live(self, frame: DataFrame) -> DataFrame:
         if self.deletions is None:
             return frame
@@ -471,8 +424,8 @@ class SearchEngine:
                                    self.config.nested_paths))
         return dsl.parse(query_json, ctx)
 
-    def search(self, query_json: dict, size: int = 10, from_: int = 0,
-               wand: bool = True) -> DataFrame:
+    def search(self, query_json: dict, size: int = 10,
+               from_: int = 0) -> DataFrame:
         """Top-k (doc_id, score), score desc, doc_id asc tie-break."""
         if self._local is not None:
             # driver-side serving: zero Spark jobs to compute the
@@ -482,28 +435,8 @@ class SearchEngine:
             return self.spark.createDataFrame(
                 [(int(d), float(s)) for d, s in rows],
                 schema=_SCORE_SCHEMA)
-        q = self.parse(query_json)
-        k = from_ + size
-        # WAND's pass-1 threshold must reflect only live docs, so the
-        # fast paths are disabled when a deletion list exists — and on
-        # nested-type indexes, where internal child rows could occupy
-        # the pass-1 top-k and mis-set the prune threshold before the
-        # parent gate below removes them
-        frame = None
-        if wand and self.deletions is None \
-                and not self.config.nested_paths:
-            if isinstance(q, dsl.Term):
-                frame = self._score_term(q.field, q.term, q.scorer, k=k)
-            elif isinstance(q, (dsl.Conjunction, dsl.Disjunction,
-                                dsl.DisjunctionMax)) \
-                    and self._fusable(q.queries):
-                mode = ("and" if isinstance(q, dsl.Conjunction) else
-                        "or" if isinstance(q, dsl.Disjunction) else "max")
-                pruned = self._fused_topk(q.queries, mode, k)
-                if pruned is not None:
-                    frame = self._materialize(pruned)
-        if frame is None:
-            frame = self._live(self._materialize(self._score(q)))
+        frame = self._live(self._materialize(self._score(
+            self.parse(query_json))))
         if self.config.nested_paths:
             # internal child rows must never surface as hits: a flat
             # query on a nested subfield scores child doc_ids — ES
@@ -648,29 +581,51 @@ class SearchEngine:
                 == len(children)
                 and len({c.scorer.similarity for c in children}) == 1)
 
-    def _fused_frame(self, children) -> DataFrame:
-        """(doc_id, child, score): all Term children in one decode."""
+    def _fused_frame(self, children,
+                     dfs: Optional[List[int]] = None) -> DataFrame:
+        """(doc_id, child, score): all Term children in one decode.
+        ``dfs`` passes on a `_dict_dfs` read the caller already made."""
         sim = children[0].scorer.similarity
-        return self._fused_blocks(children).select(
+        return self._fused_blocks(children, dfs).select(
             "segment", "doc_bytes", "tf_bytes", "len_bytes", "df_global",
             "boost", "total_docs", "total_tokens", "child"
         ).mapInArrow(_fused_decode_fn(sim, self.precision),
                       schema=_FUSED_SCHEMA)
 
-    def _fused_core(self, children) -> DataFrame:
-        """Spec-attached block rows for fusable Term children — no df
-        aggregate attached (the pruned path gets df from its one
-        metadata job; the full path attaches the dictionary literal).
+    def _dict_dfs(self, children) -> Optional[List[int]]:
+        """Per-child global df from the driver-side term dictionary
+        (0 for a term it does not hold) — a zero-job read; None for
+        legacy indexes without the sidecar.  A miss is exact: the
+        sidecar is derived from the same committed postings the fused
+        frame scans (td_ok gates the reader on per-job completeness),
+        so a term absent from it has no block rows either."""
+        if self.dict_reader is None:
+            return None
+        looked = self.dict_reader.lookup(
+            [(c.field, c.term) for c in children])
+        return [int(looked.get((c.field, c.term), (0, 0))[0])
+                for c in children]
 
-        The per-child spec (child ordinal, boost, field stats) is
-        driver-known, so it attaches as LITERAL column expressions
-        (a when-chain keyed on (field, term) + element_at arrays)
-        instead of the previous broadcast-joined ``createDataFrame``:
+    def _fused_blocks(self, children,
+                      dfs: Optional[List[int]] = None) -> DataFrame:
+        """Block rows for fusable Term children with the per-child
+        spec (child ordinal, boost, field stats, df_global) attached.
+
+        The spec is driver-known, so it attaches as LITERAL column
+        expressions (a when-chain keyed on (field, term) + element_at
+        arrays) instead of a broadcast-joined ``createDataFrame``:
         that spec materialized as a pickled Python RDD scan plus a
         BroadcastExchange — one extra Spark job and a Python worker
         round-trip on EVERY fused query (guide §2.4: remove exchanges
         outright; §1 plan audit showed `Scan ExistingRDD` +
-        `BroadcastExchange` under every fused plan)."""
+        `BroadcastExchange` under every fused plan).
+
+        df_global comes from the driver-side term dictionary when the
+        sidecar exists (`_dict_dfs`, the source the zero-job `_count`
+        already trusts; the sidecar is maintained through merges,
+        `tests/test_term_dict.py`).  Legacy indexes aggregate
+        df_block in-plan, which costs a full block-metadata scan plus
+        an aggregate-broadcast exchange per query."""
         tb = self.config.tbuckets
         blocks = self.postings.where(
             F.col("tbucket").isin(
@@ -694,242 +649,18 @@ class SearchEngine:
                         .cast("long") for c in children])
         tts = F.array(*[F.lit(self.field_stats.get(c.field, (0, 0))[1])
                         .cast("long") for c in children])
-        return (blocks
-                .withColumn("boost", F.element_at(boosts, idx))
-                .withColumn("total_docs", F.element_at(tds, idx))
-                .withColumn("total_tokens", F.element_at(tts, idx)))
-
-    def _fused_blocks(self, children) -> DataFrame:
-        """Spec-joined block rows for fusable Term children (shared by
-        the full decode and the pruned top-k paths).
-
-        df_global comes from the driver-side term dictionary when the
-        sidecar exists — a zero-job read (the same source the pruned
-        path and the zero-job `_count` already trust; the sidecar is
-        maintained through merges, `tests/test_term_dict.py`) joined
-        in as a broadcast LITERAL.  The legacy fallback aggregates
-        df_block in-plan, which costs a full block-metadata scan plus
-        an aggregate-broadcast exchange PER QUERY.
-        ``SPARK_GRAFT_FUSED_DICT_DF=0`` forces the fallback (A/B)."""
-        blocks = self._fused_core(children)
-        if self.dict_reader is not None and os.environ.get(
-                "SPARK_GRAFT_FUSED_DICT_DF", "1") != "0":
-            # dictionary df attaches as a LITERAL array indexed by the
-            # child ordinal — the broadcast-joined createDataFrame it
-            # replaces cost a pickled-RDD scan + BroadcastExchange per
-            # query (one more Spark job; see _fused_core).  A lookup
-            # miss yields df 0, which is safe by construction: the
-            # sidecar is derived from the same committed postings this
-            # frame scans (td_ok gates the reader on per-job
-            # completeness), so a missing (field, term) has no block
-            # rows either — df 0 never reaches a scored posting
-            looked = self.dict_reader.lookup(
-                [(c.field, c.term) for c in children])
-            dfs = F.array(*[
-                F.lit(int(looked.get((c.field, c.term), (0, 0))[0]))
-                .cast("long") for c in children])
-            return blocks.withColumn(
-                "df_global", F.element_at(dfs, F.col("child") + F.lit(1)))
+        blocks = (blocks
+                  .withColumn("boost", F.element_at(boosts, idx))
+                  .withColumn("total_docs", F.element_at(tds, idx))
+                  .withColumn("total_tokens", F.element_at(tts, idx)))
+        if dfs is None:
+            dfs = self._dict_dfs(children)
+        if dfs is not None:
+            return blocks.withColumn("df_global", F.element_at(
+                F.array(*[F.lit(d).cast("long") for d in dfs]), idx))
         dfagg = blocks.groupBy("field", "term").agg(
             F.sum("df_block").cast("long").alias("df_global"))
         return blocks.join(F.broadcast(dfagg), ["field", "term"])
-
-    @staticmethod
-    def _fused_ub_udf():
-        """Vectorized per-block upper bound with PER-ROW stats (the
-        fused path scores several terms in one frame): exact f32 bm25
-        of (max_tf, min_len), grouped by child inside each batch."""
-        @F.pandas_udf("double")
-        def _ub(child: pd.Series, max_tf: pd.Series, min_len: pd.Series,
-                df_global: pd.Series, total_docs: pd.Series,
-                total_tokens: pd.Series, boost: pd.Series) -> pd.Series:
-            out = np.zeros(len(child), dtype=np.float64)
-            cvals = child.to_numpy()
-            for c in np.unique(cvals):
-                m = cvals == c
-                i = np.nonzero(m)[0][0]
-                u = bm25_f32(max_tf.to_numpy(np.int64)[m],
-                             lengths_from_bytes(
-                                 min_len.to_numpy(np.int64)[m]),
-                             int(total_tokens.iloc[i]),
-                             int(total_docs.iloc[i]),
-                             int(df_global.iloc[i])) \
-                    * np.float32(boost.iloc[i])
-                out[m] = u.astype(np.float64)
-            return pd.Series(out)
-
-        return _ub
-
-    def _fused_topk(self, children, mode: str, k: int,
-                    probe_blocks: int = 16,
-                    min_postings: Optional[int] = None) -> Optional[Scored]:
-        """Block-max pruning for fused multi-term top-k (the common
-        match / multi_match / dis_max case — the reference only ever
-        prunes via its TopScoreCollector doc-at-a-time; this is the
-        bulk-engine equivalent).
-
-        Skip rule per mode, with M_j ≥ child j's best block ub:
-        Avg (and/or): skip block b of child i iff
-        (ub_b + Σ_{j≠i} M_j) / n < θ;  Max: iff ub_b < θ.
-        Soundness: a doc in a skipped block has true score below θ ≤
-        the true k-th score, so it is outside the top-k; conversely a
-        true top-k doc can sit in NO skipped block, so every child row
-        it owns is decoded — its aggregated score (and, for "and"
-        mode, its child count) stays exact.  θ comes from pass-1
-        partial aggregates, which lower-bound true scores (safe).
-
-        Engage gate: ONE metadata-only aggregate (df/min/max column
-        stats, no ub UDF, no decode) decides whether pruning pays —
-        Σdf_block ≥ min_postings AND enough blocks.  Below the gate
-        the SAME blocks frame is fully decoded (nothing recomputed),
-        so small/medium corpora pay exactly the unpruned plan.
-        """
-        if (self.precision != "f32"
-                or children[0].scorer.similarity != dsl.BM25):
-            return None
-        if min_postings is None:
-            min_postings = self.prune_min_postings
-        self._fused_pruned = False
-        n = len(children)
-        blocks = self._fused_core(children)
-        # the gate needs (df, n_blocks) per child.  With the sidecar,
-        # that is a driver-side dictionary read — ZERO Spark jobs
-        # before the single decode job.  Legacy fallback: one cheap
-        # metadata aggregate (min/max column stats, no ub UDF).
-        if self.dict_reader is not None:
-            looked = self.dict_reader.lookup(
-                [(c.field, c.term) for c in children])
-            dfmap = {i: looked[(c.field, c.term)][0]
-                     for i, c in enumerate(children)
-                     if (c.field, c.term) in looked}
-            nbsum = sum(v[1] for v in looked.values())
-        else:
-            meta = blocks.groupBy("child").agg(
-                F.sum("df_block").cast("long").alias("dfg"),
-                F.count("*").alias("nb")).collect()
-            dfmap = {int(r.child): int(r.dfg) for r in meta}
-            nbsum = sum(int(r.nb) for r in meta)
-        if not dfmap or (mode == "and" and len(dfmap) < n):
-            return ("none", None)      # a child has no postings at all
-        df_col = F.create_map(*[x for c, v in dfmap.items()
-                                for x in (F.lit(c), F.lit(v))]) \
-            [F.col("child")].cast("long")
-        wdf = blocks.withColumn("df_global", df_col)
-        sim = children[0].scorer.similarity
-        decode_cols = ["segment", "doc_bytes", "tf_bytes", "len_bytes",
-                       "df_global", "boost", "total_docs",
-                       "total_tokens", "child"]
-
-        def _full() -> Scored:
-            rows = (wdf.select(*decode_cols)
-                    .mapInArrow(_fused_decode_fn(sim, self.precision),
-                                 schema=_FUSED_SCHEMA))
-            return ("df", self._fused_aggregate(rows, mode, n))
-
-        if (nbsum <= 2 * probe_blocks * n
-                or sum(dfmap.values())
-                < self._prune_threshold(min_postings)):
-            return _full()             # decode is the cheaper plan
-        self._fused_pruned = True
-        # Pruning pays its metadata aggregate only now that the gate
-        # says decode cost dominates.  Per-child ceiling M_j:
-        # bm25(max over blocks of max_tf, min over blocks of min_len)
-        # ≥ every per-block ub of child j (monotone ↑tf, ↓len).
-        # Conservative (≥ the exact max block ub) ⇒ skip rule stays
-        # sound, and no ub UDF runs before probe selection.
-        mm = blocks.groupBy("child").agg(
-            F.max("max_tf").alias("mtf"),
-            F.min("min_len").alias("mln")).collect()
-        M = {}
-        for r in mm:
-            if int(r.child) not in dfmap:
-                continue
-            c = children[r.child]
-            d, t = self.field_stats.get(c.field, (0, 0))
-            u = bm25_f32(np.array([r.mtf], dtype=np.int64),
-                         lengths_from_bytes(
-                             np.array([r.mln], dtype=np.int64)),
-                         t, d, dfmap[int(r.child)]) \
-                * np.float32(c.scorer.boost)
-            M[int(r.child)] = float(u[0])
-        sum_m = float(sum(M.values()))
-        ub_udf = self._fused_ub_udf()
-        wb = wdf.withColumn("ub", ub_udf(
-            F.col("child"), F.col("max_tf"), F.col("min_len"),
-            F.col("df_global"), F.col("total_docs"),
-            F.col("total_tokens"), F.col("boost")))
-        # bounded executor-side probe selection (per-partition top-N,
-        # then top-N of those) — never a single-task sort of a head
-        # term's full block metadata
-        probes = self._per_child_top_segments(wb, probe_blocks)
-        probed = wb.join(
-            F.broadcast(probes.withColumn("_p", F.lit(True))),
-            ["child", "segment"], "left") \
-            .withColumn("_p", F.coalesce(F.col("_p"), F.lit(False)))
-        p1_rows = (probed.where(F.col("_p"))
-                   .select(*decode_cols)
-                   .mapInArrow(_fused_decode_fn(sim, self.precision),
-                                schema=_FUSED_SCHEMA))
-        theta = self._fused_theta(p1_rows, mode, n, k)
-        if theta == -math.inf:
-            # not enough pass-1 candidates: decode the SAME frame
-            self._fused_pruned = False
-            return _full()
-        # pass 2: per-mode block bound vs θ (column math, no driver
-        # lists); probe blocks are re-decoded so ONE aggregation sees
-        # every surviving row exactly once
-        m_col = F.create_map(*[x for c, m in M.items()
-                               for x in (F.lit(int(c)), F.lit(float(m)))])
-        if mode == "max":
-            bound = F.col("ub")
-        else:
-            bound = (F.col("ub") + F.lit(sum_m)
-                     - m_col[F.col("child")]) / F.lit(float(n))
-        survivors = (probed.where(F.col("_p") | (bound >= F.lit(theta)))
-                     .select(*decode_cols)
-                     .mapInArrow(_fused_decode_fn(sim, self.precision),
-                                  schema=_FUSED_SCHEMA))
-        return ("df", self._fused_aggregate(survivors, mode, n))
-
-    @staticmethod
-    def _per_child_top_segments(wb: DataFrame,
-                                probe_blocks: int) -> DataFrame:
-        """(child, segment) of each child's ``probe_blocks`` highest-ub
-        blocks, tie-broken by segment asc.  Two-level bounded
-        aggregation: every task holds ≤ probe_blocks candidates per
-        (child, input-partition), so a head term with 10⁶ block rows
-        never sorts in one task (the row_number() window it replaces
-        did exactly that)."""
-        cand = F.struct((-F.col("ub")).alias("nu"),
-                        F.col("segment").alias("s"))
-        topn = lambda col: F.slice(F.sort_array(F.collect_list(col)),
-                                   1, probe_blocks)
-        local = (wb.select("child", cand.alias("c"),
-                           F.spark_partition_id().alias("pid"))
-                 .groupBy("child", "pid").agg(topn("c").alias("top")))
-        glob = (local.select("child", F.explode("top").alias("c"))
-                .groupBy("child").agg(topn("c").alias("top")))
-        return (glob.select("child", F.explode("top").alias("c"))
-                .select("child", F.col("c.s").alias("segment"))
-                .distinct())
-
-    def _fused_theta(self, rows: DataFrame, mode: str, n: int,
-                     k: int) -> float:
-        agg = self._fused_aggregate(rows, mode, n)
-        top = agg.orderBy(F.desc("score"), F.asc("doc_id")) \
-            .limit(k).collect()
-        return top[-1].score if len(top) >= k else -math.inf
-
-    @staticmethod
-    def _fused_aggregate(rows: DataFrame, mode: str, n: int) -> DataFrame:
-        g = rows.groupBy("doc_id")
-        if mode == "and":
-            agg = g.agg(F.count("*").alias("c"), F.sum("score").alias("s"))
-            return agg.where(F.col("c") == n).select(
-                "doc_id", (F.col("s") / F.lit(float(n))).alias("score"))
-        if mode == "or":
-            return g.agg((F.sum("score") / F.lit(float(n))).alias("score"))
-        return g.agg(F.max("score").alias("score"))
 
     # ---------------------------------------------------------------
     # term-level scoring
@@ -958,12 +689,8 @@ class SearchEngine:
         return blocks.join(F.broadcast(agg), ["field", "term"])
 
     def _score_term(self, field: str, term: str, scorer: dsl.TermScorer,
-                    k: Optional[int] = None,
                     needs_score: bool = True) -> DataFrame:
         blocks = self._term_blocks(field, term)
-        if (k is not None and needs_score and self.precision == "f32"
-                and scorer.similarity == dsl.BM25):
-            return self._wand_prune(blocks, field, scorer, k, term=term)
         if not needs_score:
             # scoring elided: df never reaches the decode (the
             # reference's no_score path) — skip the df aggregate
@@ -977,94 +704,6 @@ class SearchEngine:
                 field, scorer.similarity, scorer.boost, True)
         return self._decode(self._with_global_df(blocks), field,
                             scorer.similarity, scorer.boost, needs_score)
-
-    def _block_ub_udf(self, field: str, df_global: int, boost: float):
-        """Per-block score upper bound as a vectorized COLUMN: exact
-        f32 bm25 of (max_tf, min_len) — metadata only, no decode."""
-        d, t = self.field_stats.get(field, (0, 0))
-        b32 = np.float32(boost)
-
-        @F.pandas_udf("double")
-        def _ub(max_tf: pd.Series, min_len: pd.Series) -> pd.Series:
-            u = bm25_f32(max_tf.to_numpy(np.int64),
-                         lengths_from_bytes(min_len.to_numpy(np.int64)),
-                         t, d, df_global) * b32
-            return pd.Series(u.astype(np.float64))
-
-        return _ub
-
-    def _wand_prune(self, blocks: DataFrame, field: str,
-                    scorer: dsl.TermScorer, k: int,
-                    probe_blocks: int = 16,
-                    min_postings: Optional[int] = None,
-                    term: Optional[str] = None) -> DataFrame:
-        """Two-pass block-max pruning for single-term top-k with
-        BOUNDED driver traffic — no term, however frequent, collects
-        more than ``probe_blocks`` metadata rows + k scores:
-
-        1. one metadata-only agg gives (df_global, n_blocks) — this
-           doubles as the engage gate (the full path needed the same
-           df aggregate anyway, so gating adds no Spark job) AND as
-           the fallback's df_global (reused as a literal, so the
-           fallback never recomputes the aggregate);
-        2. the per-block upper bound becomes a COLUMN (vectorized f32
-           bm25 over (max_tf, min_len)) — evaluated only AFTER the
-           gate decides pruning pays (Σdf_block ≥ min_postings);
-        3. pass 1 decodes the ``probe_blocks`` highest-ub blocks
-           (TakeOrdered — executor-side selection) and establishes
-           θ = the k-th best true score;
-        4. pass 2 decodes only remaining blocks with ub ≥ θ — a
-           column comparison evaluated on executors, never a
-           driver-side segment list.
-
-        Skipping is answer-preserving: every doc of a skipped block
-        scores ≤ its block ub < θ ≤ the true k-th score.  Returns a
-        superset of the true top-k with exact scores; below the gate,
-        the full decode of the same blocks (also exact).
-        """
-        if min_postings is None:
-            min_postings = self.prune_min_postings
-        self._wand_pruned = False
-        if self.dict_reader is not None and term is not None:
-            # driver-side dictionary lookup: no Spark job for the gate
-            df_global, nb = self.dict_reader.lookup_one(field, term)
-        else:
-            stats = blocks.agg(F.sum("df_block").alias("dfg"),
-                               F.count("*").alias("nb")).collect()[0]
-            df_global, nb = int(stats.dfg or 0), int(stats.nb or 0)
-
-        def _full() -> DataFrame:
-            return self._decode(
-                blocks.withColumn("df_global", F.lit(df_global)),
-                field, scorer.similarity, scorer.boost, True)
-
-        if (not nb or nb <= 2 * probe_blocks
-                or df_global < self._prune_threshold(min_postings)):
-            return _full()               # decode is the cheaper plan
-        ub_udf = self._block_ub_udf(field, df_global, scorer.boost)
-        wb = blocks.withColumn("ub", ub_udf(F.col("max_tf"),
-                                            F.col("min_len")))
-        probe = (wb.select("segment", "df_block", "ub")
-                 .orderBy(F.desc("ub"), F.asc("segment"))
-                 .limit(probe_blocks).collect())
-        if sum(r.df_block for r in probe) < k:
-            return _full()               # probe can't establish θ
-        self._wand_pruned = True
-        p1_segs = [r.segment for r in probe]
-        p1 = self._decode(
-            blocks.where(F.col("segment").isin(p1_segs))
-            .withColumn("df_global", F.lit(df_global)),
-            field, scorer.similarity, scorer.boost, True)
-        top1 = p1.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-        theta = top1[-1].score if len(top1) >= k else -math.inf
-        p2 = self._decode(
-            wb.where(~F.col("segment").isin(p1_segs)
-                     & (F.col("ub") >= theta))
-            .withColumn("df_global", F.lit(df_global)),
-            field, scorer.similarity, scorer.boost, True)
-        p1_again = self.spark.createDataFrame(
-            [(r.doc_id, r.score) for r in top1], schema=_SCORE_SCHEMA)
-        return p1_again.unionByName(p2)
 
     def _score_prefix(self, q: dsl.Prefix,
                       needs_score: bool = True) -> DataFrame:
@@ -1731,7 +1370,15 @@ class SearchEngine:
         rocksdb/search/mod.rs:112-116).
         """
         if self._fusable(children):
-            fused = self._fused_frame(children)
+            # Empty constant folding (boolean_query.rs:131-321): a term
+            # the dictionary lacks has no postings, so a conjunction
+            # over it, or a disjunction of only such terms, is NONE
+            # without scanning a block
+            dfs = self._dict_dfs(children)
+            if dfs is not None and not (all(dfs) if mode == "and"
+                                        else any(dfs)):
+                return ("none", None)
+            fused = self._fused_frame(children, dfs)
             n = len(children)
             g = fused.groupBy("doc_id")
             if mode == "and":

@@ -276,3 +276,39 @@ def test_get_document_nonstring_key_absent_string_bucket(spark, tmp_path):
         doc = c.get_document("p", probe)
         assert doc is not None and doc["pk"] == pk, probe
     assert c.get_document("p", "999999") is None
+
+
+def test_get_document_driver_matches_spark_when_job_adds_column(
+        spark, webtext, tmp_path):
+    """A later job stores a column the first job's docs files lack.
+    The zero-job driver GET returns the columns of the union read the
+    Spark path returns (None where a job's file lacks one), so both
+    GET paths give equal dicts for documents of either job."""
+    from rusticsearch_spark.cluster import Cluster
+    from rusticsearch_spark.index.build import build_index
+    from rusticsearch_spark.index.layout import IndexLayout
+    from rusticsearch_spark.streaming.ingest import StreamingIngester
+    c = Cluster(spark, str(tmp_path / "addcol_cluster"))
+    c.create_index("pages", {"properties": {
+        "text": {"type": "string"},
+        "lang": {"type": "string", "index": "not_analyzed"}}},
+        key_col="url")
+    path = c._dir("pages")
+    base = webtext.limit(40).select("url", "text", "lang")
+    odd = F.pmod(F.xxhash64("url"), F.lit(2)) == 1
+    first, later = base.where(~odd), base.where(odd)
+    build_index(spark, first, path, _cfg())
+    layout = IndexLayout(path)
+    cfg = layout.read_config()
+    cfg.stored = cfg.stored + ["note"]
+    layout.write_config(cfg)
+    StreamingIngester(spark, path).process_batch(
+        later.withColumn("note", F.concat(F.lit("n:"), F.col("lang"))), 0)
+    eng = c.engine("pages")
+    assert len(eng._jobs) == 2
+    for part in (first, later):
+        key = part.select("url").first().url
+        rows = eng.docs.where(F.col("url") == key).limit(1).collect()
+        want = rows[0].asDict()
+        assert Cluster._get_document_driver(eng, key) == want, key
+        assert c.get_document("pages", key) == want, key

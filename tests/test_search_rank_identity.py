@@ -73,17 +73,6 @@ def test_missing_term_empty(engine, oracle):
     assert engine.count(q) == 0
 
 
-def test_wand_pruning_matches_full_eval(engine):
-    """Block-max WAND (single-term fast path) must equal the unpruned
-    evaluation exactly — pruning is answer-preserving."""
-    q = {"term": {"text": "table"}}
-    pruned = [(r.doc_id, r.score) for r in
-              engine.search(q, size=10, wand=True).collect()]
-    full = [(r.doc_id, r.score) for r in
-            engine.search(q, size=10, wand=False).collect()]
-    assert pruned == full
-
-
 def test_hits_join_keys(engine):
     hits = engine.hits({"match": {"text": "merge"}}, size=3)
     assert len(hits) == 3
@@ -92,104 +81,97 @@ def test_hits_join_keys(engine):
         assert h["score"] > 0
 
 
-def test_wand_pruning_engages_on_many_blocks(spark, webtext, tmp_path):
-    """With n_buckets=40 every common term spans ~40 posting blocks
-    (> 2×probe_blocks), so the two-pass bounded-θ pruning path
-    actually executes; results must equal the unpruned evaluation."""
-    import shutil
+@pytest.mark.parametrize("query", [
+    {"match": {"text": {"query": "spark zzzzunseen", "operator": "and"}}},
+    {"match": {"text": "zzzzunseen qqqqunseen"}},
+    {"dis_max": {"queries": [{"term": {"text": "zzzzunseen"}},
+                             {"term": {"lang": "qqqqunseen"}}]}},
+], ids=["and_one_absent", "or_all_absent", "dis_max_all_absent"])
+def test_absent_term_folds_to_empty_without_postings_scan(engine, query):
+    """Empty constant folding (boolean_query.rs:131-321): a conjunction
+    with a term the dictionary lacks, or a disjunction of only such
+    terms, returns no hits without scanning a posting block."""
+    top = engine.search(query, size=10)
+    assert "FileScan" not in top._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert top.collect() == []
+    # the plan probe is live: a present conjunction does scan postings
+    present = engine.search({"match": {"text": {"query": "spark query",
+                                                "operator": "and"}}})
+    assert "FileScan" in present._jdf.queryExecution() \
+        .executedPlan().toString()
+
+
+@pytest.fixture(scope="module")
+def many_block_index(spark, webtext, tmp_path_factory):
+    """n_buckets=40 puts every document bucket in its own segment, so
+    a common term spans ~40 posting blocks — the multi-segment decode
+    shape the 4-bucket session index never reaches.  Returns the index
+    path and an oracle over exactly its (doc_id, text, lang) rows."""
     from rusticsearch_spark.index.build import build_index
     from rusticsearch_spark.index.layout import IndexConfig
-    from rusticsearch_spark.query.engine import SearchEngine
-    path = str(tmp_path / "wand_idx")
-    shutil.rmtree(path, ignore_errors=True)
+    from rusticsearch_spark.oracle.engine import OracleIndex
+    path = str(tmp_path_factory.mktemp("many_block") / "idx")
     build_index(spark, webtext, path,
                 IndexConfig(key_col="url",
                             fields={"text": "standard", "lang": None},
                             n_buckets=40, tbuckets=2,
                             shuffle_partitions=4), jobs=1)
-    eng = SearchEngine(spark, path)
-    eng.prune_min_postings = 0   # force the gate open at toy scale
-    engaged = 0
-    for q in [{"term": {"text": "the"}}, {"term": {"text": "data"}}]:
-        blocks = eng._term_blocks("text", q["term"]["text"])
-        if blocks.count() <= 32:
-            continue   # term too rare in this corpus slice
-        a = [(r.doc_id, r.score) for r in
-             eng.search(q, size=7, wand=True).collect()]
-        if eng._wand_pruned:
-            engaged += 1
-        b = [(r.doc_id, r.score) for r in
-             eng.search(q, size=7, wand=False).collect()]
-        assert a == b and len(a) > 0
-    assert engaged >= 1   # the pruning path actually executed
+    o = OracleIndex({"text": "standard", "lang": None})
+    docs = (spark.read.parquet(path + "/docs")
+            .select("doc_id", "text", "lang").collect())
+    for r in sorted(docs, key=lambda r: r.doc_id):
+        o.add(r.doc_id, {"text": r.text, "lang": r.lang})
+    return path, o
 
 
-def test_fused_multiterm_pruning_matches_full_eval(spark, webtext,
-                                                   tmp_path):
-    """Block-max pruning for fused match/multi_match/dis_max top-k:
-    with n_buckets=40 the per-term block counts exceed the engage
-    threshold; pruned results must equal the unpruned path exactly
-    (doc ids AND f32 scores)."""
-    import shutil
-    from rusticsearch_spark.index.build import build_index
-    from rusticsearch_spark.index.layout import IndexConfig
+def _assert_many_block_topk(spark, many_block_index, queries):
+    """Spark mode, the oracle and mode="local" agree on doc ids and f32
+    scores at sizes 5 and 11 over the ~40-block index."""
     from rusticsearch_spark.query.engine import SearchEngine
-    path = str(tmp_path / "wand_multi_idx")
-    shutil.rmtree(path, ignore_errors=True)
-    build_index(spark, webtext, path,
-                IndexConfig(key_col="url",
-                            fields={"text": "standard", "lang": None},
-                            n_buckets=40, tbuckets=2,
-                            shuffle_partitions=4), jobs=1)
+    path, oracle = many_block_index
     eng = SearchEngine(spark, path)
-    eng.prune_min_postings = 0   # force the gate open at toy scale
-    queries = [
+    loc = SearchEngine(spark, path, mode="local")
+    assert eng.dict_reader.lookup_one("text", "the")[1] >= 30
+
+    def f32(rows):
+        return np.float32([r[1] for r in rows])
+
+    for q in queries:
+        for size in (5, 11):
+            got = [(r.doc_id, r.score) for r in
+                   eng.search(q, size=size).collect()]
+            want = oracle.search(eng.parse(q), k=size)
+            local = [(r.doc_id, r.score) for r in
+                     loc.search(q, size=size).collect()]
+            assert len(got) == size, (q, size)
+            assert [g[0] for g in got] == [w[0] for w in want] \
+                == [x[0] for x in local], (q, size)
+            np.testing.assert_array_equal(f32(got), f32(want),
+                                          err_msg=str((q, size)))
+            np.testing.assert_array_equal(f32(got), f32(local),
+                                          err_msg=str((q, size)))
+
+
+def test_wand_pruning_engages_on_many_blocks(spark, many_block_index):
+    """Single-term top-k over terms spanning ~40 posting blocks — the
+    shape the block-max prune used to target; the one-job full decode
+    must match the oracle and mode="local" exactly."""
+    _assert_many_block_topk(spark, many_block_index, [
+        {"term": {"text": "the"}},
+        {"term": {"text": "data"}},
+    ])
+
+
+def test_fused_multiterm_pruning_matches_full_eval(spark, many_block_index):
+    """Fused match or/and and multi_match top-k over the ~40-block
+    index (the multi-term shapes the fused prune used to target) must
+    match the oracle and mode="local" exactly."""
+    _assert_many_block_topk(spark, many_block_index, [
         {"match": {"text": "the data with for"}},
         {"match": {"text": {"query": "the data", "operator": "and"}}},
         {"multi_match": {"query": "the data", "fields": ["text", "lang"]}},
-    ]
-    engaged = 0
-    for q in queries:
-        parsed = eng.parse(q)
-        mode = ("and" if parsed.__class__.__name__ == "Conjunction" else
-                "max" if parsed.__class__.__name__ == "DisjunctionMax"
-                else "or")
-        if eng._fusable(parsed.queries):
-            eng._fused_topk(parsed.queries, mode, 7, probe_blocks=4)
-            if eng._fused_pruned:
-                engaged += 1
-        for size in (5, 11):
-            a = [(r.doc_id, r.score) for r in
-                 eng.search(q, size=size, wand=True).collect()]
-            b = [(r.doc_id, r.score) for r in
-                 eng.search(q, size=size, wand=False).collect()]
-            assert a == b, (q, size)
-    assert engaged >= 2   # pruning path actually exercised
-
-
-def test_prune_gate_is_parallelism_aware(engine):
-    """The block-max prune trades a distributed full decode
-    (wall ~ Σdf / task slots) for 2-3 SEQUENTIAL driver round-trips,
-    so its engage gate must scale with parallelism: below ~5M
-    postings per slot the one-job cached decode measured 3-5× faster
-    (BENCH/APPENDIX_r5_experiments.md).  Pin: the threshold scales
-    with defaultParallelism, 0 still forces the gate open (the
-    parity tests above), and a toy corpus never engages under the
-    default gate."""
-    eng = engine
-    slots = eng.spark.sparkContext.defaultParallelism
-    assert eng._prune_threshold(0) == 0
-    assert (eng._prune_threshold(eng.PRUNE_MIN_POSTINGS)
-            == eng.PRUNE_POSTINGS_PER_SLOT * slots)
-    # a threshold already above the per-slot floor passes through
-    big = eng.PRUNE_POSTINGS_PER_SLOT * slots * 10
-    assert eng._prune_threshold(big) == big
-    # default gate: toy corpus decodes in full, no two-pass prune
-    eng.search({"term": {"text": "the"}}, size=5, wand=True).collect()
-    assert not eng._wand_pruned
-    eng.search({"match": {"text": "the data"}}, size=5,
-               wand=True).collect()
-    assert not eng._fused_pruned
+    ])
 
 
 def test_nested_fused_combine_matches_generic(engine):

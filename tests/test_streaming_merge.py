@@ -328,3 +328,70 @@ def test_merge_nested_index_preserves_content_and_queries(
     hits = before.hits(inner, size=30)
     assert hits and all(h["inner_hits"]["comments"] for h in hits)
     assert after.hits(inner, size=30) == hits
+
+
+def test_legacy_block_max_columns_open_ingest_merge(spark, webtext,
+                                                    tmp_path):
+    """Older jobs whose postings still carry the block-max columns
+    (max_tf, min_len) next to jobs written without them: the mixed
+    index opens, ingests, merges and answers in spark, local and
+    sharded mode exactly like the same index without the legacy
+    columns — every postings reader selects its columns by name."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rusticsearch_spark.index.build import build_index
+    from rusticsearch_spark.index.codec import decode_block
+    base = webtext.select("url", "text", "lang")
+    later = F.pmod(F.xxhash64("url"), F.lit(4)) == 0
+    current = str(tmp_path / "current")
+    legacy = str(tmp_path / "legacy")
+    build_index(spark, base.where(~later), current, IndexConfig(**CFG),
+                jobs=2)
+    shutil.copytree(current, legacy)
+    files = glob.glob(f"{legacy}/postings/job=0/**/*.parquet",
+                      recursive=True)
+    assert files
+    for f in files:
+        t = pq.ParquetFile(f).read()
+        max_tf, min_len = [], []
+        for seg, d, tf, ln in zip(*[t.column(c).to_pylist() for c in
+                                    ("segment", "doc_bytes", "tf_bytes",
+                                     "len_bytes")]):
+            _, tfs, lens = decode_block(seg, d, tf, ln)
+            max_tf.append(int(tfs.max()))
+            min_len.append(int(lens.min()))
+        at = t.schema.get_field_index("sum_tf") + 1
+        t = (t.add_column(at, "max_tf", pa.array(max_tf, pa.int32()))
+             .add_column(at + 1, "min_len", pa.array(min_len, pa.int32())))
+        pq.write_table(t, f)
+        crc = os.path.join(os.path.dirname(f),
+                           f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)       # stale checksum of the rewritten file
+    for d in (current, legacy):
+        StreamingIngester(spark, d).process_batch(base.where(later), 0)
+        merge_jobs(spark, d, d + "_merged")
+    queries = [QUERY, {"term": {"text": "the"}},
+               {"match": {"text": {"query": "table scan",
+                                   "operator": "and"}}},
+               {"multi_match": {"query": "spark en",
+                                "fields": ["text^2", "lang"]}},
+               {"prefix": {"text": "sc"}}]
+
+    def answers(d):
+        out = []
+        for mode in ("spark", "local", "sharded"):
+            eng = SearchEngine(spark, d, mode=mode)
+            for q in queries:
+                out.append((mode, eng.count(q), [
+                    (r.doc_id, r.score)
+                    for r in eng.search(q, size=10).collect()]))
+        return out
+
+    assert "max_tf" in pq.ParquetFile(files[0]).schema_arrow.names
+    assert len(IndexLayout(legacy).completed_jobs(spark)) == 3
+    assert answers(legacy) == answers(current)
+    assert answers(legacy + "_merged") == answers(current + "_merged")

@@ -45,7 +45,10 @@ def test_posting_blocks_bounded_by_segment(spark, index_dir):
     """No block exceeds the 65,536-doc segment capacity and every
     decoded doc_id belongs to the block's segment — the explicit
     skew-salt property (a head term splits across segments)."""
-    blocks = spark.read.parquet(index_dir + "/postings").collect()
+    postings = spark.read.parquet(index_dir + "/postings")
+    # no block-max columns: nothing reads them
+    assert not {"max_tf", "min_len"} & set(postings.columns)
+    blocks = postings.collect()
     assert blocks
     for b in blocks:
         assert 0 < b.df_block <= (1 << SEGMENT_BITS)
@@ -54,8 +57,6 @@ def test_posting_blocks_bounded_by_segment(spark, index_dir):
         assert len(doc_ids) == b.df_block == len(tfs) == len(lens)
         assert (doc_ids >> SEGMENT_BITS == b.segment).all()
         assert (np.diff(doc_ids) > 0).all()          # sorted unique
-        assert tfs.max() == b.max_tf
-        assert lens.min() == b.min_len
         assert tfs.sum() == b.sum_tf
 
 
