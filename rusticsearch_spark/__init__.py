@@ -6,9 +6,11 @@ a single-node Rust full-text search server) as distributed DataFrame
 pipelines:
 
 * ``analysis``  — tokenizers/filters (UAX#29-ish standard tokenizer,
-  lowercase, ASCII folding, ngram/edge-ngram) as vectorized pandas UDFs.
+  lowercase, ASCII folding, ngram/edge-ngram); the build runs the
+  common analyzers as native SQL and the Python chain only where a
+  row needs it.
 * ``index``     — distributed posting-list construction
-  (delta + varbyte compressed, block-max metadata), doc/field/term
+  (delta + varbyte compressed, per-block df and sum_tf), doc/field/term
   statistics, checkpointed + resumable builds.
 * ``query``     — the reference's query DSL (match/term/terms/prefix/
   bool combinators/filtered/...) parsed into a Query tree and planned

@@ -13,20 +13,26 @@ declarative Spark pipeline:
    ``segment << 16 | local`` (src/search/document.rs:10-22); we keep
    ``segment = doc_id >> 16`` so every segment holds ≤ 65,536 docs —
    the same structural constant (segment_ops.rs:260-262).
-2. **analysis** — one fused Arrow-batched pandas UDF per field
-   computes (term, tf) pairs + the quantized length byte *inside the
-   map stage*, so raw token occurrences never shuffle (map-side
-   combine of the reference's per-doc TermVector build).
-3. **posting encode** — one shuffle on ``(field, term, segment)``.
-   The *segment* component is the explicit skew salt: a head term
-   ("the") appearing in every document splits into one group per
-   65,536-doc segment, so no reducer ever sees more than 65,536
-   postings for one key.  Groups are delta+varbyte encoded
-   (``index.codec``) with per-block ``(df_block, sum_tf)`` metadata.
-4. **layout shuffle** — the (small, compressed) block table is
-   range-partitioned by term and written under ``tbucket=`` Hive
-   partitions sorted by term: queries prune by directory, then by
-   parquet min/max on ``term``.
+2. **analysis** — per field, a native SQL tokenizer
+   (``sql_terms_column``) for rows with no non-ASCII word character
+   and the Python analyzer chain (a pandas UDF) for the rest; a
+   field whose docs hold no such row (observed on the docs write)
+   plans no Python at all.  A map-side partial aggregation counts tf
+   and computes the quantized length byte, so raw token occurrences
+   never shuffle (map-side combine of the reference's per-doc
+   TermVector build).
+3. **posting encode** — one shuffle on ``(field, term, segment)``,
+   its width sized from the job's observed text bytes and capped by
+   ``shuffle_partitions`` (``layout.data_width``).  The *segment*
+   component is the explicit skew salt: a head term ("the")
+   appearing in every document splits into one group per 65,536-doc
+   segment, so no reducer ever sees more than 65,536 postings for
+   one key.  Groups are delta+varbyte encoded (``index.codec``) with
+   per-block ``(df_block, sum_tf)`` metadata.
+4. **layout** — each encode partition sorts by (tbucket, term), so
+   blocks stream out clustered for the ``tbucket=`` Hive partitions
+   and term-sorted inside every file: queries prune by directory,
+   then by parquet min/max on ``term``; no second shuffle.
 5. **commit** — per-job lineage row written last (atomic activate,
    mirroring segment_ops.rs:216-235).
 
@@ -39,7 +45,7 @@ from __future__ import annotations
 
 import shutil
 import time
-from typing import Callable, List, Optional
+from typing import Callable, Dict, List, Optional
 
 import numpy as np
 import pandas as pd
@@ -50,8 +56,8 @@ from pyspark.sql import types as T
 from ..analysis.analyzers import Analyzer, AnalyzerRegistry, parse_analysis_settings
 from .codec import (BUCKET_SHIFT, LOCAL_MASK, SEGMENT_BITS,
                     varbyte_encode_offsets)
-from .layout import (IndexConfig, IndexLayout, qname, term_bucket_col,
-                     write_small_table)
+from .layout import (IndexConfig, IndexLayout, data_width, qname,
+                     term_bucket_col, write_small_table)
 
 POSTINGS_SCHEMA = T.StructType([
     T.StructField("field", T.StringType()),
@@ -101,6 +107,24 @@ def sql_terms_column(sql_kind: str, col) -> "F.Column":
         return F.regexp_extract_all(F.lower(col), F.lit("[a-z0-9]+"),
                                     F.lit(0))
     raise ValueError(f"unknown sql_kind: {sql_kind!r}")
+
+
+def _unsafe_col(fname: str, is_array: bool) -> "F.Column":
+    """True for a row the SQL tokenizer cannot take (an array: any
+    non-null item).  The ONE routing predicate: the docs write counts
+    it and ``_posting_rows`` splits on it, so a zero count is exact."""
+    col = F.col(qname(fname))
+    if is_array:
+        return F.exists(F.filter(col, lambda x: x.isNotNull()),
+                        lambda x: x.rlike(SQL_UNSAFE_CHAR))
+    return col.rlike(SQL_UNSAFE_CHAR)
+
+
+#: target input text bytes per posting-exchange partition
+#: (``layout.data_width``).  Web text holds ~14 input bytes per
+#: distinct (doc, term) posting row, so 16 MiB is ~1M rows — the
+#: doc_index sidecar's rows-per-partition target.
+_TEXT_BYTES_PER_PARTITION = 16 << 20
 
 
 def _registry(config: IndexConfig) -> AnalyzerRegistry:
@@ -287,7 +311,8 @@ def _encode_partitions_arrow(field_names: List[str]):
 
 
 def _posting_rows(ids: DataFrame, config: IndexConfig,
-                  registry: AnalyzerRegistry) -> DataFrame:
+                  registry: AnalyzerRegistry,
+                  unsafe_rows: Dict[str, int]) -> DataFrame:
     """Analyzed, pre-counted (field_ord, term, doc_id, len_byte, tf)
     rows, unioned over fields — the build's and the streaming
     ingester's postings input to ``write_job``.  Length quantization
@@ -309,6 +334,11 @@ def _posting_rows(ids: DataFrame, config: IndexConfig,
     fewer rows on English web text.  (A pure-expression per-doc
     combine via sort_array + zip_with was tried and benched 3× slower:
     higher-order functions evaluate interpreted, with no CSE.)
+
+    ``unsafe_rows`` is the docs write's observed per-field count of
+    rows the SQL tokenizer cannot take (``_unsafe_col``).  A field
+    with none plans the SQL tokenizer alone: no Python task runs, and
+    the plan is exact because the same predicate decided every row.
     """
     from ..similarity import length_byte_sql
     array_fields = {f.name for f in ids.schema.fields
@@ -353,21 +383,21 @@ def _posting_rows(ids: DataFrame, config: IndexConfig,
             sql_col = (F.flatten(F.transform(
                 items, lambda x: sql_terms_column(analyzer.sql_kind, x)))
                 if analyzer.sql_kind else None)
-            unsafe = F.exists(F.col(qname(fname)),
-                              lambda x: x.rlike(SQL_UNSAFE_CHAR))
             tok = tokenize_array_udf(analyzer)
         else:
             sql_col = (sql_terms_column(analyzer.sql_kind, F.col(qname(fname)))
                        if analyzer.sql_kind else None)
-            unsafe = F.col(qname(fname)).rlike(SQL_UNSAFE_CHAR)
             tok = tokenize_udf(analyzer)
-        if sql_col is not None:
+        if sql_col is not None and not unsafe_rows[fname]:
+            t = base.select(F.col("doc_id"), sql_col.alias("terms"))
+        elif sql_col is not None:
             # SQL fast path for safe rows, pandas UDF for the rest.
             # Split into two frames (not one when()): Spark evaluates
             # a pandas UDF in its own ArrowEvalPython node for EVERY
             # row regardless of the branch, so a conditional
             # projection would still pay the Python hop for the whole
             # corpus.
+            unsafe = _unsafe_col(fname, is_array)
             t = (base.where(~unsafe).select(
                     F.col("doc_id"), sql_col.alias("terms"))
                  .unionByName(base.where(unsafe).select(
@@ -455,7 +485,8 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
         ids = with_bucket.where(
             (F.col("_bucket") >= lo) & (F.col("_bucket") < hi)).drop("_bucket")
         return write_job(spark, ids, layout, config, job,
-                         lambda docs: _posting_rows(docs, config, registry),
+                         lambda docs, unsafe: _posting_rows(
+                             docs, config, registry, unsafe),
                          extra={"bucket_lo": lo, "bucket_hi": hi})
 
     pending = [j for j in range(jobs) if j not in done]
@@ -485,29 +516,38 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
 
 def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
               config: IndexConfig, job: int,
-              posting_rows: Callable[[DataFrame], DataFrame],
+              posting_rows: Callable[[DataFrame, Dict[str, int]],
+                                     DataFrame],
               extra: Optional[dict] = None) -> dict:
     """Write one job's docs/doc_index/postings/term_dict/field_stats +
     the atomic lineage commit — the ONE segment-write path, shared by
     the batch builder, the streaming ingester and the merge.
 
     ``ids`` must already carry a globally-unique ``doc_id``.
-    ``posting_rows`` maps the written docs table to pre-counted
-    ``(field_ord, term, doc_id, len_byte, tf)`` rows, at most one per
-    (field, term, doc): build and ingest analyze the docs
-    (:func:`_posting_rows`); merge ignores them and hands in the rows
-    decoded from its source blocks."""
+    ``posting_rows(docs, unsafe_rows)`` maps the written docs table to
+    pre-counted ``(field_ord, term, doc_id, len_byte, tf)`` rows, at
+    most one per (field, term, doc): build and ingest analyze the docs
+    (:func:`_posting_rows`, routed by the observed ``unsafe_rows``);
+    merge ignores both and hands in the rows decoded from its source
+    blocks.
+
+    The returned row adds two facts the lineage commit does not keep:
+    ``python_rows`` (the observed rows the Python tokenizer takes,
+    summed over fields; merge analyzes nothing, so for it this only
+    describes the docs) and ``postings_partitions`` (the posting
+    exchange width)."""
     layout.clear_incomplete_job(job)
     t0 = time.monotonic()
     shuffle_p = (config.shuffle_partitions
                  or int(spark.conf.get("spark.sql.shuffle.partitions")))
 
     # docs table first; re-read it so the id computation runs once and
-    # downstream stages read a pruned columnar scan.  The row count and
-    # per-field presence counts (the ftdoc statistics) ride on the SAME
-    # job as observe() metrics — zero extra jobs/scans for stats (the
-    # previous count() + field-agg jobs were a measurable slice of the
-    # build's Amdahl-serial share at high parallelism).
+    # downstream stages read a pruned columnar scan.  What the later
+    # steps need to know about the docs rides on the SAME job as
+    # observe() metrics — zero extra jobs/scans: the row count and
+    # per-field presence counts (the ftdoc statistics), per SQL-routed
+    # field the rows the SQL tokenizer cannot take, and the indexed
+    # text bytes that size the posting exchange.
     import pyarrow as pa
     from pyspark.sql import Observation
     obs = Observation(f"build_job_{job}")
@@ -515,15 +555,36 @@ def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
         c for c in dict.fromkeys(list(config.fields) + config.stored)
         if c != config.key_col]
     field_alias = {f: f"__fdocs_{i}" for i, f in enumerate(config.fields)}
+    types = {f.name: f.dataType for f in ids.schema.fields}
+    array_fields = {f for f in config.fields
+                    if isinstance(types[f], T.ArrayType)}
+    registry = _registry(config)
+    unsafe_alias = {f: f"__unsafe_{i}"
+                    for i, (f, a) in enumerate(config.fields.items())
+                    if a is not None and registry.get(a).sql_kind}
+    text_bytes = F.lit(0)
+    for f in config.fields:
+        if isinstance(getattr(types[f], "elementType", types[f]),
+                      T.StringType):
+            c = F.col(qname(f))
+            text_bytes += F.coalesce(F.octet_length(
+                F.array_join(c, "") if f in array_fields else c), F.lit(0))
     ids.select(*[F.col(qname(c)).alias(c) for c in doc_cols]) \
         .observe(obs, F.count(F.lit(1)).alias("__n_docs"),
                  *[F.count(F.col(qname(f))).alias(a)
-                   for f, a in field_alias.items()]) \
+                   for f, a in field_alias.items()],
+                 *[F.count(F.when(_unsafe_col(f, f in array_fields),
+                                  F.lit(1))).alias(a)
+                   for f, a in unsafe_alias.items()],
+                 F.sum(text_bytes).alias("__text_bytes")) \
         .write.mode("overwrite").parquet(
         layout.job_dir("docs", job))
     metrics = obs.get
     n_docs = int(metrics["__n_docs"])
     doc_counts = {f: int(metrics[a]) for f, a in field_alias.items()}
+    unsafe_rows = {f: int(metrics[a]) for f, a in unsafe_alias.items()}
+    width = data_width(metrics["__text_bytes"] or 0,
+                       _TEXT_BYTES_PER_PARTITION, shuffle_p)
     ids = spark.read.parquet(layout.job_dir("docs", job))
 
     # PK sidecar: (key, doc_id) bucketed by a global key hash, so
@@ -550,8 +611,10 @@ def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
 
     # ONE shuffle end to end: hash-repartition on (field_ord, term,
     # segment) co-locates each posting group (segment = the structural
-    # skew salt); the within-partition sort leads with the JVM-computed
-    # tbucket so the encoder streams blocks out already clustered for
+    # skew salt), into ``width`` partitions sized from the observed
+    # text bytes (each partition's encode is one Python task); the
+    # within-partition sort leads with the JVM-computed tbucket so the
+    # encoder streams blocks out already clustered for
     # the partitionBy(tbucket) layout AND term-sorted within every
     # file (parquet row-group min/max pruning on `term` stays tight).
     # The previous layout used a second repartitionByRange over the
@@ -563,8 +626,8 @@ def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
     # len_byte, tf) — every extra Tungsten field is 8 aligned bytes on
     # the build's only wide shuffle.
     try:
-        (posting_rows(ids)
-         .repartition(shuffle_p, "field_ord", "term",
+        (posting_rows(ids, unsafe_rows)
+         .repartition(width, "field_ord", "term",
                       F.shiftrightunsigned("doc_id", SEGMENT_BITS))
          .withColumn("segment", F.shiftrightunsigned("doc_id", SEGMENT_BITS))
          .withColumn("tbucket", term_bucket_col(F.col("term"),
@@ -593,7 +656,7 @@ def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
                  F.count("*").cast("int").alias("n_blocks"),
                  F.sum("sum_tf").cast("long").alias("sum_tf"))
         tok_alias = {f: f"__ftok_{i}" for i, f in enumerate(config.fields)}
-        (dict_src.repartition(max(1, shuffle_p // 4), "field", "term")
+        (dict_src.repartition(max(1, width // 4), "field", "term")
          .sortWithinPartitions("field", "term")
          .observe(tok_obs, F.sum("n_blocks").alias("__n_blocks"),
                   *[F.sum(F.when(F.col("field") == f, F.col("sum_tf")))
@@ -629,6 +692,8 @@ def write_job(spark: SparkSession, ids: DataFrame, layout: IndexLayout,
     row = {
         "job": job,
         "n_docs": n_docs, "n_posting_blocks": n_blocks,
+        "python_rows": sum(unsafe_rows.values()),
+        "postings_partitions": width,
         "wall_sec": round(time.monotonic() - t0, 3),
         "status": "done", "finished_unix": int(time.time()),
         **(extra or {}),

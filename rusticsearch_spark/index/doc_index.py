@@ -26,7 +26,7 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .layout import IndexConfig, IndexLayout
+from .layout import IndexConfig, IndexLayout, data_width
 
 
 def key_bucket_col(key_col, kbuckets: int):
@@ -35,28 +35,23 @@ def key_bucket_col(key_col, kbuckets: int):
 
 
 #: target (key, doc_id) rows per sidecar shuffle partition — the
-#: adaptive width divisor (guide §2.2: size reduce partitions from the
-#: data, don't fix them to a constant tuned for one scale)
+#: ``data_width`` divisor
 _ROWS_PER_PARTITION = 1 << 20
 
 
 def write_doc_index(ids: DataFrame, layout: IndexLayout,
                     config: IndexConfig, job: int,
-                    shuffle_partitions: int,
-                    n_rows: Optional[int] = None) -> None:
+                    shuffle_partitions: int, n_rows: int) -> None:
     """Write one job's (key, doc_id) sidecar, partitioned by the
     global key bucket.  Narrow columns only — at 10⁹ docs this is
     ~tens of GB against a multi-TB corpus.
 
     ``n_rows`` (the docs-write observe() metric, known before this
-    job runs) makes the exchange width scale-adaptive: a toy job
-    shuffles into 1 partition instead of ``min(kbuckets,
-    shuffle_partitions)`` near-empty tasks, while large jobs keep the
-    full width (the cap is unchanged, so cluster-scale plans are
-    identical)."""
-    width = min(config.kbuckets, shuffle_partitions)
-    if n_rows is not None:
-        width = max(1, min(width, -(-int(n_rows) // _ROWS_PER_PARTITION)))
+    job runs) sizes the exchange (``data_width``): a toy job shuffles
+    into 1 partition instead of ``min(kbuckets, shuffle_partitions)``
+    near-empty tasks, while large jobs keep that full width."""
+    width = data_width(n_rows, _ROWS_PER_PARTITION,
+                       min(config.kbuckets, shuffle_partitions))
     (ids.select(F.col(config.key_col), F.col("doc_id"))
      .withColumn("kbucket", key_bucket_col(F.col(config.key_col),
                                            config.kbuckets))

@@ -74,6 +74,9 @@ class IndexConfig:
     #: this hash is GLOBAL and stable across jobs, so a point lookup
     #: prunes to corpus/kbuckets regardless of which job holds the doc.
     kbuckets: int = 64
+    #: cap of the build's data-sized exchange widths (postings,
+    #: term_dict, doc_index; ``layout.data_width``); None = the
+    #: session's ``spark.sql.shuffle.partitions``
     shuffle_partitions: Optional[int] = None
     analysis_settings: Optional[dict] = None  # ES-style custom analyzers
     #: ES `nested`-TYPE paths: array fields whose elements were
@@ -133,6 +136,16 @@ def write_small_table(path: str, rows: List[dict], schema=None) -> None:
     tmp = os.path.join(path, ".part-00000.parquet.tmp")
     pq.write_table(tbl, tmp)
     os.replace(tmp, os.path.join(path, "part-00000.parquet"))
+
+
+def data_width(amount: int, per_partition: int, cap: int) -> int:
+    """Exchange width sized from data a job already observed: one
+    partition per ``per_partition`` units of ``amount``, at least 1 and
+    at most ``cap``, rather than a constant tuned for one scale.  A toy
+    job shuffles into one partition instead of ``cap`` near-empty
+    tasks; a job large enough to reach the cap plans exactly as a
+    fixed ``cap`` width would."""
+    return max(1, min(cap, -(-int(amount) // per_partition)))
 
 
 def term_bucket(term: str, tbuckets: int) -> int:

@@ -103,7 +103,7 @@ def merge_jobs(spark: SparkSession, index_dir: str, out_dir: str,
     if deletions is not None:
         docs = docs.join(deletions, "doc_id", "left_anti")
         rows = rows.join(deletions, "doc_id", "left_anti")
-    return write_job(spark, docs, out, config, 0, lambda _docs: rows,
+    return write_job(spark, docs, out, config, 0, lambda _docs, _unsafe: rows,
                      extra={"merged_from": ",".join(str(j) for j in jobs)})
 
 

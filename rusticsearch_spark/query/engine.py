@@ -606,6 +606,17 @@ class SearchEngine:
         return [int(looked.get((c.field, c.term), (0, 0))[0])
                 for c in children]
 
+    def _fused_dfs(self, children,
+                   mode: str) -> Tuple[Optional[List[int]], bool]:
+        """(`_dict_dfs`, empty) for a fused combinator.  ``empty`` is
+        Empty constant folding (boolean_query.rs:131-321): a term the
+        dictionary lacks has no postings, so a conjunction (``mode``
+        "and") over it, or a disjunction of only such terms, matches
+        nothing and no block need be scanned."""
+        dfs = self._dict_dfs(children)
+        return dfs, (dfs is not None
+                     and not (all(dfs) if mode == "and" else any(dfs)))
+
     def _fused_blocks(self, children,
                       dfs: Optional[List[int]] = None) -> DataFrame:
         """Block rows for fusable Term children with the per-child
@@ -1069,7 +1080,10 @@ class SearchEngine:
             return self._exists_docset(q.field)
         if isinstance(q, dsl.Conjunction):
             if self._fusable(q.queries):
-                fused = self._fused_frame(q.queries)
+                dfs, empty = self._fused_dfs(q.queries, "and")
+                if empty:
+                    return NONE
+                fused = self._fused_frame(q.queries, dfs)
                 return (fused.groupBy("doc_id")
                         .agg(F.count("*").alias("c"))
                         .where(F.col("c") == len(q.queries))
@@ -1082,7 +1096,10 @@ class SearchEngine:
             return acc
         if isinstance(q, (dsl.Disjunction, dsl.DisjunctionMax)):
             if self._fusable(q.queries):
-                return self._fused_frame(q.queries) \
+                dfs, empty = self._fused_dfs(q.queries, "or")
+                if empty:
+                    return NONE
+                return self._fused_frame(q.queries, dfs) \
                     .select("doc_id").distinct()
             acc = NONE
             for c in q.queries:
@@ -1370,13 +1387,8 @@ class SearchEngine:
         rocksdb/search/mod.rs:112-116).
         """
         if self._fusable(children):
-            # Empty constant folding (boolean_query.rs:131-321): a term
-            # the dictionary lacks has no postings, so a conjunction
-            # over it, or a disjunction of only such terms, is NONE
-            # without scanning a block
-            dfs = self._dict_dfs(children)
-            if dfs is not None and not (all(dfs) if mode == "and"
-                                        else any(dfs)):
+            dfs, empty = self._fused_dfs(children, mode)
+            if empty:
                 return ("none", None)
             fused = self._fused_frame(children, dfs)
             n = len(children)

@@ -131,8 +131,8 @@ class StreamingIngester:
         ids = assign_doc_ids(batch_df, key, self.n_buckets_per_batch,
                              bucket_base=base).drop("_bucket")
         write_job(self.spark, ids, self.layout, self.config, job,
-                  lambda docs: _posting_rows(docs, self.config,
-                                             self.registry),
+                  lambda docs, unsafe: _posting_rows(
+                      docs, self.config, self.registry, unsafe),
                   extra={"batch_id": int(batch_id)})
 
 

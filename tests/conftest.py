@@ -32,6 +32,24 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def sql_plans(spark):
+    """A callable returning the physical plans of the SQL executions
+    that ran since this fixture was set up, read from Spark's SQL
+    status store (its listener runs on the event bus: drained first)."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def _execs():
+        bus.waitUntilEmpty(10_000)
+        ex = store.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    seen = {e.executionId() for e in _execs()}
+    return lambda: [e.physicalPlanDescription() for e in _execs()
+                    if e.executionId() not in seen]
+
+
 @pytest.fixture(scope="session")
 def webtext(spark):
     from pyspark.sql import functions as F

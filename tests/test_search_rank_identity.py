@@ -5,6 +5,8 @@ combinators).  Top-k doc_ids must be identical in order; scores must
 agree to f32 ULP tolerance.  Counts (the _count path, scoring elided)
 must be exact."""
 
+import re
+
 import numpy as np
 import pytest
 
@@ -100,6 +102,25 @@ def test_absent_term_folds_to_empty_without_postings_scan(engine, query):
                                                 "operator": "and"}}})
     assert "FileScan" in present._jdf.queryExecution() \
         .executedPlan().toString()
+
+
+@pytest.mark.parametrize("query", [
+    {"match": {"text": {"query": "spark zzzzunseen", "operator": "and"}}},
+    {"match": {"text": "zzzzunseen qqqqunseen"}},
+], ids=["and_one_absent", "or_all_absent"])
+def test_absent_term_count_folds_without_postings_scan(engine, sql_plans,
+                                                       query):
+    """The count path (`_docset`) folds the same way: 0, and not one
+    SQL execution, so no postings scan."""
+    assert engine.count(query) == 0
+    assert sql_plans() == []
+    # the probe is live: a present conjunction's count scans postings
+    assert engine.count({"match": {"text": {"query": "spark query",
+                                            "operator": "and"}}}) > 0
+    plans = sql_plans()
+    assert plans and all(re.search(r"Scan parquet.*\n(?:.*\n)*?"
+                                   r"Location: .*/postings", p)
+                         for p in plans), plans
 
 
 @pytest.fixture(scope="module")
