@@ -105,8 +105,7 @@ def main() -> None:
         print(json.dumps({"step": "build",
                           "sec": round(time.monotonic() - t0, 3)}))
 
-    engine = SearchEngine(spark, idx_dir, cache_postings=True)
-    engine.postings.count()
+    engine = SearchEngine(spark, idx_dir)
 
     tracker = sc.statusTracker()
 

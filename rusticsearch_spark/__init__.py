@@ -13,8 +13,9 @@ pipelines:
   (delta + varbyte compressed, per-block df and sum_tf), doc/field/term
   statistics, checkpointed + resumable builds.
 * ``query``     — the reference's query DSL (match/term/terms/prefix/
-  bool combinators/filtered/...) parsed into a Query tree and planned
-  into DataFrame set-algebra + BM25 scoring.
+  bool combinators/filtered/...) parsed into a Query tree and scored
+  with BM25 by one numpy evaluator, run on the driver or once per job
+  shard in a single Spark job.
 * ``ops``       — large-scale corpus operations (dedup, similarity
   search, text stats) the reference does not have but a web-scale
   pipeline needs.

@@ -79,16 +79,15 @@ def get_engine(spark: SparkSession, sf_dir: str) -> SearchEngine:
                     IndexConfig(key_col="src_doc_id", fields=dict(_FIELDS),
                                 field_types=dict(_FIELD_TYPES),
                                 n_buckets=8, tbuckets=4), jobs=1)
-    eng = SearchEngine(spark, idx_dir, precision="f64",
-                       cache_postings=True)
+    eng = SearchEngine(spark, idx_dir, precision="f64")
     _engines[key] = eng
     return eng
 
 
 def _scored(eng: SearchEngine, query_json: dict) -> DataFrame:
     """All matching docs as (doc_id, score) in source doc_id space."""
-    frame = eng._materialize(eng._score(eng.parse(query_json)))
-    return (frame.join(eng.docs.select("doc_id", "src_doc_id"), "doc_id")
+    return (eng.matches(query_json)
+            .join(eng.docs.select("doc_id", "src_doc_id"), "doc_id")
             .select(F.col("src_doc_id").alias("doc_id"),
                     F.round(F.col("score"), 6).alias("score")))
 
@@ -268,7 +267,7 @@ def q_fts_wildcard(spark, sf_dir):
     spark, stream} from the driver-side dictionary (the selector the
     reference declares but never implements,
     multi_term_selector.rs:3-16), Avg over the GLOBAL matching-term
-    count — one fused postings job like prefix."""
+    count — one shard job like prefix."""
     eng = get_engine(spark, sf_dir)
     return _scored(eng, {"wildcard": {"text": "s*a*"}})
 
@@ -446,7 +445,7 @@ def q_fts_nested_type(spark, sf_dir):
     both conditions (document.rs:87-89 TODO exceeded: the reference
     never ships object OR nested mappings)."""
     eng = _nested_type_engine(spark, sf_dir)
-    frame = eng._docset(eng.parse(_NESTED_AND))
+    frame = eng.matches(_NESTED_AND)
     # parent key IS the source doc id (string-cast by prepare_docs)
     return (frame.join(eng.docs.select("doc_id", "src_doc_id"), "doc_id")
             .select(F.col("src_doc_id").cast("long").alias("doc_id")))
@@ -569,7 +568,7 @@ def q_fts_nested_deep(spark, sf_dir):
     OUTER post level (not the root), so the comment must live in the
     same post that carries the topic."""
     eng = _nested_deep_engine(spark, sf_dir)
-    frame = eng._docset(eng.parse(_NESTED_DEEP))
+    frame = eng.matches(_NESTED_DEEP)
     return (frame.join(eng.docs.select("doc_id", "src_doc_id"), "doc_id")
             .select(F.col("src_doc_id").cast("long").alias("doc_id")))
 
@@ -693,7 +692,7 @@ def q_fts_exists(spark, sf_dir):
     q = {"filtered": {
         "query": {"exists": {"field": "tags"}},
         "filter": {"not": {"missing": {"field": "maybe_lang"}}}}}
-    frame = eng._docset(eng.parse(q))
+    frame = eng.matches(q)
     return (frame.join(eng.docs.select("doc_id", "src_doc_id"), "doc_id")
             .select(F.col("src_doc_id").cast("long").alias("doc_id")))
 

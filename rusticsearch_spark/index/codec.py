@@ -143,25 +143,6 @@ def varbyte_decode_concat(buf: np.ndarray, offsets: np.ndarray):
     return _accumulate_varbyte(b, group, pos, n), counts
 
 
-def decode_docids_concat(segments: np.ndarray,
-                         doc_buf: np.ndarray, doc_offsets: np.ndarray):
-    """Doc ids only — the score-elided docset path of
-    :func:`decode_blocks_concat`: tf/len streams are never touched.
-    Returns ``(doc_ids int64, counts int64)``."""
-    deltas, counts = varbyte_decode_concat(doc_buf, doc_offsets)
-    excl = np.empty(deltas.size + 1, dtype=np.int64)
-    excl[0] = 0
-    np.cumsum(deltas.astype(np.int64), out=excl[1:])
-    block_starts = np.empty(counts.size + 1, dtype=np.int64)
-    block_starts[0] = 0
-    np.cumsum(counts, out=block_starts[1:])
-    local = excl[1:] - np.repeat(excl[block_starts[:-1]], counts)
-    seg_base = (np.ascontiguousarray(segments, dtype=np.int64)
-                << SEGMENT_BITS)
-    doc_ids = np.repeat(seg_base, counts) + local
-    return doc_ids, counts
-
-
 def decode_blocks_concat(segments: np.ndarray,
                          doc_buf: np.ndarray, doc_offsets: np.ndarray,
                          tf_buf: np.ndarray, tf_offsets: np.ndarray,
@@ -222,24 +203,18 @@ def concat_binary(col):
     return buf, offsets
 
 
-def batch_decode(rb, docs_only: bool = False):
+def batch_decode(rb):
     """One vectorized decode of every posting block in an Arrow
     ``RecordBatch`` with ``segment`` / ``doc_bytes`` / ``tf_bytes`` /
-    ``len_bytes`` columns — shared by the query engine's decode UDFs
-    and the merge's posting decode.
+    ``len_bytes`` columns (the merge's posting decode).
 
     Returns ``(doc_ids, tfs, lens, counts)`` — ``counts[i]`` postings
-    belong to block row ``i`` of the batch, laid out in row order.
-    ``docs_only`` skips the tf/len streams (the score-elided docset
-    path decodes just doc ids)."""
+    belong to block row ``i`` of the batch, laid out in row order."""
     import pyarrow as pa
 
     segs = rb.column("segment").to_numpy(zero_copy_only=False)
     doc_buf, doc_off = concat_binary(
         pa.chunked_array([rb.column("doc_bytes")]))
-    if docs_only:
-        doc_ids, counts = decode_docids_concat(segs, doc_buf, doc_off)
-        return doc_ids, None, None, counts
     tf_buf, tf_off = concat_binary(
         pa.chunked_array([rb.column("tf_bytes")]))
     len_buf, len_off = concat_binary(

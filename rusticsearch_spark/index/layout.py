@@ -29,7 +29,7 @@ import json
 import os
 import shutil
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional
+from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -168,6 +168,19 @@ def term_bucket_col(term_col, tbuckets: int):
         F.lit(tbuckets)).cast("int")
 
 
+@dataclass(frozen=True)
+class Snapshot:
+    """What one reader sees of an index, resolved once when it opens:
+    the committed job ids, the deletion-list files and the per-field
+    statistics summed over those jobs.  A reader that evaluates a
+    query in several places (one task per job shard) hands every
+    place this object, so a job, a deletion list or statistics
+    committed later never mix into an answer."""
+    jobs: Tuple[int, ...]
+    deletion_files: Tuple[str, ...]
+    field_stats: Dict[str, Tuple[int, int]]
+
+
 class IndexLayout:
     """Paths + config + lineage for one index directory."""
 
@@ -293,6 +306,27 @@ class IndexLayout:
         return sorted(
             os.path.join(root, d) for d in os.listdir(root)
             if os.path.isdir(os.path.join(root, d)))
+
+    def snapshot(self) -> Snapshot:
+        """Resolve a ``Snapshot`` with driver-side pyarrow reads (no
+        Spark job)."""
+        import pyarrow.parquet as pq
+        jobs = tuple(self.completed_jobs_local())
+        files = tuple(
+            os.path.join(d, f) for d in self.deletion_dirs()
+            for f in sorted(os.listdir(d))
+            if f.endswith(".parquet") and not f.startswith((".", "_")))
+        stats: Dict[str, Tuple[int, int]] = {}
+        for j in jobs:
+            d = self.job_dir("field_stats", j)
+            if not os.path.isdir(d):
+                continue
+            cols = pq.read_table(d).to_pydict()
+            for f, n, t in zip(cols["field"], cols["total_docs"],
+                               cols["total_tokens"]):
+                pn, pt = stats.get(f, (0, 0))
+                stats[f] = (pn + int(n), pt + int(t))
+        return Snapshot(jobs, files, stats)
 
     def next_deletion_dir(self) -> str:
         dirs = self.deletion_dirs()

@@ -10,11 +10,11 @@ exact-term lookup prunes to the row groups whose term min/max covers
 the probe — a few KB of IO however large the corpus — and returns
 ``(df_global, n_blocks)`` summed across jobs.
 
-This is what lets the query planner GATE block-max pruning and attach
-``df_global`` to decode plans without spending a Spark metadata job
-per query: a term query is one decode job, full stop.  A small LRU
-memoizes repeated lookups per engine snapshot (the dictionary is
-immutable per committed lineage).
+The query engine reads every global score input here before its one
+Spark job — each key's df and each MultiTerm selector's divisor and
+matched terms — so no Spark metadata job runs per query.  A small
+cache memoizes repeated lookups per engine snapshot (the dictionary
+is immutable per committed lineage).
 """
 
 from __future__ import annotations
@@ -102,7 +102,7 @@ class TermDictReader:
         feeds the MultiTerm Avg divisor, term_dictionary.rs:78-85);
         the term list + tbuckets prune the postings scan for the
         QUERY field, and the query field's per-term global df rides
-        the same read (→ literal df attach, no in-plan df aggregate).
+        the same read.
         Raises when more than ``max_terms`` distinct terms match (the
         same driver-safety bound ES enforces via max_expansions)."""
         import pyarrow.dataset as ds
@@ -149,8 +149,7 @@ class TermDictReader:
         already a columnar table) and the driver collects ONLY the
         matched (term, field-tbucket) rows, still bounded by
         ``max_terms``.  ``pred`` is the SQL form of the selector
-        (rlike / levenshtein — exactly the legacy-fallback predicate,
-        so dictionary↔legacy parity is preserved by construction)."""
+        (rlike / levenshtein)."""
         from pyspark.sql import functions as F
         rows = (spark.read.parquet(*self.paths)
                 .where(pred)
@@ -173,9 +172,8 @@ class TermDictReader:
                         ) -> Tuple[int, List[int], Dict[str, int]]:
         """``prefix_stats`` plus the query field's per-term global df
         ({term: df}, summed across jobs) from the SAME dictionary
-        read — lets the planner attach ``df_global`` as a literal and
-        skip the per-query in-plan df aggregate (one fewer Exchange +
-        BroadcastExchange + postings scan per multi-term query)."""
+        read: the divisor and the matched terms' idf inputs of a
+        prefix query in one dictionary slice."""
         import pyarrow.compute as pc
         import pyarrow.dataset as ds
         f = ds.field("term") >= prefix

@@ -1,4 +1,4 @@
-"""LocalSearcher: millisecond serving over a Spark-built index.
+"""LocalSearcher: the query evaluator, for serving and for Spark tasks.
 
 The build side is distributed (100 TB story, ``index.build``); the
 serving side of the reference is a single-node process answering in
@@ -9,16 +9,21 @@ loads one shard (default: the whole test-scale index; ``jobs=``
 restricts it to a document shard); ``ShardedSearcher`` below is the
 scale-out shape — one LocalSearcher per build job (jobs own disjoint
 doc buckets, so any query tree evaluates exactly per shard), global
-top-k by merging per-shard top-k.
+top-k by merging per-shard top-k.  Spark-mode ``SearchEngine`` runs
+the same evaluator once per job shard inside Spark tasks, each
+restricted to the postings of its query's own terms
+(``LocalSearcher.pinned``), so every serving mode shares one
+evaluator.
 
 Everything is numpy set-at-a-time over the decoded blocks, computing
-the exact f32 scores of ``similarity.py`` — the same rank-identity
-battery that pins the Spark engine pins this one
-(tests/test_local_searcher.py).
+the exact f32 scores of ``similarity.py`` (or f64 for the SQL oracle
+rows); tests/test_local_searcher.py pins rank identity against the
+pure-Python oracle.
 """
 
 from __future__ import annotations
 
+from functools import cached_property
 from typing import Dict, List, Optional, Tuple
 
 import numpy as np
@@ -26,8 +31,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from ..index.codec import concat_binary, decode_blocks_concat
-from ..index.layout import IndexConfig, IndexLayout
-from ..similarity import bm25_f32, lengths_from_bytes, tfidf_f32
+from ..index.layout import IndexConfig, IndexLayout, Snapshot, term_bucket
+from ..similarity import (bm25_f32, bm25_f64, lengths_from_bytes,
+                          lengths_from_bytes_f64, tfidf_f32, tfidf_f64)
 from ..analysis.analyzers import AnalyzerRegistry, parse_analysis_settings
 from . import dsl
 
@@ -75,6 +81,53 @@ def _ranges_to_indices(starts: np.ndarray,
             + np.repeat(starts - excl, lengths))
 
 
+_POSTING_COLS = ["field", "term", "segment", "doc_bytes", "tf_bytes",
+                 "len_bytes"]
+
+
+def _read_postings(dirs: List[str], keys, tbuckets: int) -> pa.Table:
+    """Posting block rows of ``dirs``; with ``keys`` (a set of
+    (field, term)) only those keys' blocks: the read prunes to their
+    tbucket partitions and, through the term-sorted row-group
+    statistics, to the row groups that can hold them."""
+    if not dirs or (keys is not None and not keys):
+        return pa.table({c: [] for c in _POSTING_COLS})
+    filters = None
+    if keys is not None:
+        terms = sorted({t for _, t in keys})
+        filters = [("tbucket", "in",
+                    sorted({term_bucket(t, tbuckets) for t in terms})),
+                   ("field", "in", sorted({f for f, _ in keys})),
+                   ("term", "in", terms)]
+    tbl = pa.concat_tables([pq.read_table(d, columns=_POSTING_COLS,
+                                          filters=filters)
+                            for d in dirs])
+    if keys is not None:
+        # the filters admit the field x term cross product
+        got = zip(tbl.column("field").to_pylist(),
+                  tbl.column("term").to_pylist())
+        tbl = tbl.filter(pa.array([k in keys for k in got],
+                                  type=pa.bool_()))
+    return tbl
+
+
+def analysis_registry(config: IndexConfig) -> AnalyzerRegistry:
+    if config.analysis_settings:
+        return parse_analysis_settings(config.analysis_settings)
+    return AnalyzerRegistry()
+
+
+def parse_query(config: IndexConfig, registry: AnalyzerRegistry,
+                query_json: dict) -> dsl.Query:
+    """Parse the JSON DSL against an index's mapping and analyzers."""
+    ctx = dsl.ParseContext(fields=dict(config.fields),
+                           analyzers=registry,
+                           field_types=dict(config.field_types),
+                           search_analyzers=dict(config.search_analyzers),
+                           nested_paths=tuple(config.nested_paths))
+    return dsl.parse(query_json, ctx)
+
+
 class LocalSearcher:
     def __init__(self, index_dir: str,
                  jobs: Optional[List[int]] = None,
@@ -101,19 +154,62 @@ class LocalSearcher:
         large shards; eager (default) pre-decodes everything so no
         first-hit pays decode — identical results either way
         (tests/test_local_searcher.py lazy battery)."""
+        layout = IndexLayout(index_dir)
+        config = layout.read_config()
+        snap = layout.snapshot()
+        if jobs is not None:
+            if config.nested_paths and not config.nested_colocated:
+                # pre-colocation indexes bucketed child rows by their
+                # SYNTHETIC key, so a per-job document shard can split
+                # a parent from its elements — per-shard evaluation
+                # would silently drop nested matches.  Indexes built
+                # with parent-keyed bucketing stamp nested_colocated
+                # and serve sharded (parent + all children share a
+                # job).
+                raise ValueError(
+                    "this nested-type index predates parent-colocated "
+                    "bucketing; rebuild it to serve job-restricted "
+                    "shards, or use the whole-index LocalSearcher / "
+                    "mode='spark'")
+            jobs = sorted(set(jobs) & set(snap.jobs))
+        self._open(index_dir, config, snap,
+                   snap.jobs if jobs is None else jobs, lazy=lazy,
+                   global_terms=global_terms, global_df=global_df)
+
+    @classmethod
+    def pinned(cls, index_dir: str, config: IndexConfig,
+               snapshot: Snapshot, jobs, **kw) -> "LocalSearcher":
+        """A searcher over ``jobs`` of an already resolved snapshot:
+        no lineage, deletion-list or field-stats read of its own.
+        Keyword arguments are ``_open``'s."""
+        self = cls.__new__(cls)
+        self._open(index_dir, config, snapshot, jobs, **kw)
+        return self
+
+    def _open(self, index_dir: str, config: IndexConfig,
+              snapshot: Snapshot, jobs, lazy: bool = False,
+              global_terms: Optional[List[str]] = None,
+              global_df: Optional[Dict[Tuple[str, str], int]] = None,
+              keys=None, selectors=None, precision: str = "f32"):
+        """Load ``jobs``' postings and deletion lists.  ``keys``
+        restricts the postings read to those (field, term) pairs (a
+        filtered parquet read: tbucket partitions, then row groups);
+        ``selectors`` maps each MultiTerm node of the query to its
+        (global divisor, matched query-field terms) — the two inputs
+        a key-restricted shard cannot derive from its own
+        dictionary.  ``precision="f64"`` scores in double precision
+        (the SQL oracle's math) instead of the reference's f32."""
         import os
         layout = IndexLayout(index_dir)
         self.index_dir = index_dir
-        self.config: IndexConfig = layout.read_config()
+        self.config = config
         self._global_terms = global_terms
         self._global_df = global_df
-        if self.config.analysis_settings:
-            self.registry = parse_analysis_settings(
-                self.config.analysis_settings)
-        else:
-            self.registry = AnalyzerRegistry()
-        # postings: (field, term) -> merged (doc_ids, tfs, lens) +
-        # per-term df; loaded eagerly from the block table
+        self._selectors = selectors
+        self._f64 = precision == "f64"
+        self.field_stats: Dict[str, Tuple[int, int]] = dict(
+            snapshot.field_stats)
+        # postings: (field, term) -> merged (doc_ids, tfs, lens)
         self._post: Dict[Tuple[str, str],
                          Tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
         # lazy mode: permuted varbyte buffers + per-key block ranges;
@@ -121,29 +217,14 @@ class LocalSearcher:
         self._lazy_data: Optional[Tuple[np.ndarray, List]] = None
         self._key_blocks: Optional[Dict[Tuple[str, str],
                                         Tuple[int, int]]] = None
-        # committed jobs only (same visibility rule as SearchEngine:
-        # lineage-resolved dirs, never a job=* glob)
-        if jobs is not None:
-            committed = set(layout.completed_jobs_local())
-            wanted = sorted(set(jobs) & committed)
 
-            def _dirs(name: str) -> List[str]:
-                return [layout.job_dir(name, j) for j in wanted
-                        if os.path.isdir(layout.job_dir(name, j))]
+        def _dirs(name: str) -> List[str]:
+            return [layout.job_dir(name, j) for j in jobs
+                    if os.path.isdir(layout.job_dir(name, j))]
 
-            post_dirs = _dirs("postings")
-            docs_dirs = _dirs("docs")
-        else:
-            post_dirs = layout.committed_dirs("postings")
-            docs_dirs = layout.committed_dirs("docs")
-        tbl = pa.concat_tables([
-            pq.read_table(d, columns=["field", "term", "segment",
-                                      "doc_bytes", "tf_bytes",
-                                      "len_bytes"])
-            for d in post_dirs]) if post_dirs else pq.read_table(
-                layout.table("postings"),
-                columns=["field", "term", "segment", "doc_bytes",
-                         "tf_bytes", "len_bytes"])
+        self._docs_dirs = _dirs("docs")
+        tbl = _read_postings(_dirs("postings"), keys,
+                             config.tbuckets)
         # Vectorized shard load: order the BLOCK rows by
         # ((field, term), segment) — segments own disjoint doc-id
         # ranges, so per key the segment-ordered block concatenation
@@ -201,105 +282,96 @@ class LocalSearcher:
                     self._post[key] = (doc_ids[key_lo[c]:key_hi[c]],
                                        tfs[key_lo[c]:key_hi[c]],
                                        lens[key_lo[c]:key_hi[c]])
-        stats = pa.concat_tables([
-            pq.read_table(d) for d in
-            layout.committed_dirs("field_stats")]).to_pydict()
-        self.field_stats: Dict[str, Tuple[int, int]] = {}
-        for f, d, t in zip(stats["field"], stats["total_docs"],
-                           stats["total_tokens"]):
-            pd_, pt = self.field_stats.get(f, (0, 0))
-            self.field_stats[f] = (pd_ + int(d), pt + int(t))
-        # nested-TYPE indexes: the docs table holds internal child
-        # rows (one per array element, `_nested_parent` = parent key,
-        # key "<parent>#<path>#<pos>" — mapping.prepare_docs).  The
-        # searcher's universe is PARENTS ONLY (children are invisible
-        # to match_all/negation/count, like the Spark engine); per
-        # path it keeps (child_ids sorted, parent doc_id aligned) for
-        # the nested-query child→parent fold, plus a temporarily
-        # swapped universe while a nested inner tree evaluates.
-        self._nested: Dict[str, Tuple[np.ndarray, np.ndarray]] = {}
+        # nested-TYPE indexes: the searcher's universe is PARENTS
+        # ONLY (see _doc_meta); a nested inner tree temporarily swaps
+        # in its path's child rows as the universe
         self._universe_override: Optional[np.ndarray] = None
         self._nested_context: Optional[str] = None
-        self._docs_dirs = docs_dirs    # for lazy nested-meta reads
-        if self.config.nested_paths and docs_dirs:
-            if jobs is not None and not self.config.nested_colocated:
-                # pre-colocation indexes bucketed child rows by their
-                # SYNTHETIC key, so a per-job document shard can split
-                # a parent from its elements — per-shard evaluation
-                # would silently drop nested matches.  Indexes built
-                # with parent-keyed bucketing stamp nested_colocated
-                # and serve sharded (parent + all children share a
-                # job; the pid-None safety skip below never fires).
-                raise ValueError(
-                    "this nested-type index predates parent-colocated "
-                    "bucketing; rebuild it to serve job-restricted "
-                    "shards, or use the whole-index LocalSearcher / "
-                    "mode='spark'")
-            key_c = self.config.key_col
-            dtbl = pa.concat_tables([
-                pq.read_table(d, columns=["doc_id", key_c,
-                                          "_nested_parent"])
-                for d in docs_dirs])
-            dids = dtbl.column("doc_id").to_numpy()
-            keys = dtbl.column(key_c).to_pylist()
-            pars = dtbl.column("_nested_parent").to_pylist()
-            is_child = np.array([p is not None for p in pars])
-            self.all_doc_ids = np.sort(dids[~is_child])
-            # ALL rows, not just roots: with multi-level nesting a
-            # child row is itself the parent of deeper child rows
-            pkey_to_id = {str(k): int(d) for k, d in zip(keys, dids)}
-            # ONE pass over the rows, not one per path: a child key
-            # is "<parent>#<path>#<pos>" with the STORED parent as
-            # its literal prefix, so slicing it off and dropping the
-            # trailing "#<pos>" recovers the path exactly (pos is
-            # digits; parent and path may themselves contain '#')
-            by_path: Dict[str, Tuple[List[int], List[int]]] = {
-                p: ([], []) for p in self.config.nested_paths}
-            for k, p, d, c in zip(keys, pars, dids, is_child):
-                if not c:
-                    continue
-                k = str(k)
-                path = k[len(str(p)) + 1:k.rfind("#")]
-                slot = by_path.get(path)
-                if slot is not None:
-                    pid = pkey_to_id.get(str(p))
-                    if pid is not None:
-                        slot[0].append(int(d))
-                        slot[1].append(pid)
-            for path, (cids, cpar) in by_path.items():
-                ca = np.asarray(cids, dtype=np.int64)
-                pa_ = np.asarray(cpar, dtype=np.int64)
-                order = np.argsort(ca)
-                self._nested[path] = (ca[order], pa_[order])
-        else:
-            self.all_doc_ids = np.sort(np.concatenate([
+        self.deleted: Optional[np.ndarray] = None
+        if snapshot.deletion_files:
+            self.deleted = np.unique(np.concatenate([
+                pq.read_table(f, columns=["doc_id"])
+                .column("doc_id").to_numpy()
+                for f in snapshot.deletion_files]))
+
+    @cached_property
+    def registry(self) -> AnalyzerRegistry:
+        return analysis_registry(self.config)
+
+    @cached_property
+    def _doc_meta(self) -> Tuple[np.ndarray,
+                                 Dict[str, Tuple[np.ndarray, np.ndarray]]]:
+        """(parent doc ids sorted, {nested path: (child ids sorted,
+        aligned parent doc ids)}), read from the shard's docs on
+        first use — a query that needs neither the universe nor a
+        nested fold never reads the docs table.
+
+        Nested-TYPE indexes: the docs table holds internal child rows
+        (one per array element, `_nested_parent` = parent key, key
+        "<parent>#<path>#<pos>" — mapping.prepare_docs).  Children
+        are invisible to match_all/negation/count, like ES hides
+        Lucene block-join child docs."""
+        docs_dirs = self._docs_dirs
+        nested: Dict[str, Tuple[np.ndarray, np.ndarray]] = {}
+        if not (self.config.nested_paths and docs_dirs):
+            return np.sort(np.concatenate([
                 pq.read_table(d, columns=["doc_id"])
                 .column("doc_id").to_numpy()
                 for d in docs_dirs] or
-                [np.empty(0, dtype=np.int64)]))
-        ddirs = layout.deletion_dirs()
-        self.deleted: Optional[np.ndarray] = None
-        if ddirs:
-            self.deleted = np.unique(np.concatenate([
-                pq.read_table(d, columns=["doc_id"])
-                .column("doc_id").to_numpy() for d in ddirs]))
+                [np.empty(0, dtype=np.int64)])), nested
+        key_c = self.config.key_col
+        dtbl = pa.concat_tables([
+            pq.read_table(d, columns=["doc_id", key_c,
+                                      "_nested_parent"])
+            for d in docs_dirs])
+        dids = dtbl.column("doc_id").to_numpy()
+        keys = dtbl.column(key_c).to_pylist()
+        pars = dtbl.column("_nested_parent").to_pylist()
+        is_child = np.array([p is not None for p in pars])
+        # ALL rows, not just roots: with multi-level nesting a child
+        # row is itself the parent of deeper child rows
+        pkey_to_id = {str(k): int(d) for k, d in zip(keys, dids)}
+        # ONE pass over the rows, not one per path: a child key is
+        # "<parent>#<path>#<pos>" with the STORED parent as its
+        # literal prefix, so slicing it off and dropping the trailing
+        # "#<pos>" recovers the path exactly (pos is digits; parent
+        # and path may themselves contain '#')
+        by_path: Dict[str, Tuple[List[int], List[int]]] = {
+            p: ([], []) for p in self.config.nested_paths}
+        for k, p, d, c in zip(keys, pars, dids, is_child):
+            if not c:
+                continue
+            k = str(k)
+            path = k[len(str(p)) + 1:k.rfind("#")]
+            slot = by_path.get(path)
+            if slot is not None:
+                pid = pkey_to_id.get(str(p))
+                if pid is not None:
+                    slot[0].append(int(d))
+                    slot[1].append(pid)
+        for path, (cids, cpar) in by_path.items():
+            ca = np.asarray(cids, dtype=np.int64)
+            pa_ = np.asarray(cpar, dtype=np.int64)
+            order = np.argsort(ca)
+            nested[path] = (ca[order], pa_[order])
+        return np.sort(dids[~is_child]), nested
+
+    @property
+    def all_doc_ids(self) -> np.ndarray:
+        return self._doc_meta[0]
+
+    @property
+    def _nested(self) -> Dict[str, Tuple[np.ndarray, np.ndarray]]:
+        return self._doc_meta[1]
 
     # -- public API ---------------------------------------------------
     def parse(self, query_json: dict) -> dsl.Query:
-        ctx = dsl.ParseContext(fields=dict(self.config.fields),
-                               analyzers=self.registry,
-                               field_types=dict(self.config.field_types),
-                               search_analyzers=dict(
-                                   self.config.search_analyzers),
-                               nested_paths=tuple(
-                                   self.config.nested_paths))
-        return dsl.parse(query_json, ctx)
+        return parse_query(self.config, self.registry, query_json)
 
     def _universe(self) -> np.ndarray:
         """Parent doc ids — or, while a nested inner tree evaluates,
         the path's child rows (match_all / root negations inside
-        `nested` range over array elements, not parents — the same
-        override the Spark engine swaps in)."""
+        `nested` range over array elements, not parents)."""
         if self._universe_override is not None:
             return self._universe_override
         return self.all_doc_ids
@@ -308,47 +380,48 @@ class LocalSearcher:
                      scores: np.ndarray) -> Frame:
         """Internal child rows must never surface as public results:
         a flat query on a nested subfield scores child doc_ids, and
-        ES semantics are that it matches nothing (engine.search's
-        parent semi-join)."""
+        ES semantics are that it matches nothing."""
         if not self.config.nested_paths or ids.size == 0:
             return ids, scores
         keep = _in_sorted(ids, self.all_doc_ids)
         return ids[keep], scores[keep]
 
-    def search(self, query_json: dict, size: int = 10,
-               from_: int = 0) -> List[Tuple[int, float]]:
-        ids, scores = self._materialize(self._score(self.parse(query_json)))
-        ids, scores = self._parent_gate(ids, scores)
+    def matches(self, q: dsl.Query) -> Frame:
+        """Every live public document ``q`` matches, with its score
+        (doc-id sorted)."""
+        ids, scores = self._parent_gate(
+            *self._materialize(self._score(q)))
         if self.deleted is not None and ids.size:
             live = ~_in_sorted(ids, self.deleted)
             ids, scores = ids[live], scores[live]
-        k = from_ + size
+        return ids, scores
+
+    def top(self, q: dsl.Query, k: int) -> List[Tuple[int, float]]:
+        """The first ``k`` matches in (score desc, doc_id asc) order."""
+        ids, scores = self.matches(q)
         if ids.size > k:
             # argpartition alone picks an ARBITRARY subset of the docs
-            # tied at the k-th score; the contract (matching the Spark
-            # engine's orderBy(score desc, doc_id asc) and the
-            # reference collector, src/search/collectors/top_score.rs)
-            # is deterministic tie-break by lowest doc_id.  Partition
-            # to find the k-th score, then keep the WHOLE tie class at
+            # tied at the k-th score; the contract (the reference
+            # collector, src/search/collectors/top_score.rs) is
+            # deterministic tie-break by lowest doc_id.  Partition to
+            # find the k-th score, then keep the WHOLE tie class at
             # the boundary so the final lexsort resolves ties.
             part = np.argpartition(-scores, k - 1)
             thresh = scores[part[k - 1]]
             keep = scores >= thresh
             ids, scores = ids[keep], scores[keep]
-        order = np.lexsort((ids, -scores))
-        return [(int(ids[i]), float(scores[i])) for i in order][from_:k]
+        order = np.lexsort((ids, -scores))[:k]
+        return [(int(ids[i]), float(scores[i])) for i in order]
+
+    def search(self, query_json: dict, size: int = 10,
+               from_: int = 0) -> List[Tuple[int, float]]:
+        return self.top(self.parse(query_json), from_ + size)[from_:]
 
     def count(self, query_json: Optional[dict] = None) -> int:
-        if query_json is None:
-            ids = self.all_doc_ids
-        else:
-            ids, s = self._materialize(self._score(self.parse(query_json)))
-            ids, _ = self._parent_gate(ids, s)
-        if self.deleted is not None and ids.size:
-            ids = ids[~_in_sorted(ids, self.deleted)]
-        return int(ids.size)
+        q = dsl.All() if query_json is None else self.parse(query_json)
+        return int(self.matches(q)[0].size)
 
-    # -- evaluation (mirrors query.engine semantics) -------------------
+    # -- evaluation -----------------------------------------------------
     def _dict_keys(self):
         """The shard's (field, term) dictionary — `_key_blocks` in
         lazy mode (where `_post` is only the decode cache)."""
@@ -390,6 +463,12 @@ class LocalSearcher:
         # posting length is only this shard's share
         df = (self._global_df.get((field, term), len(ids))
               if self._global_df is not None else len(ids))
+        if self._f64:
+            if scorer.similarity == dsl.TFIDF:
+                s = tfidf_f64(tfs, d, df)
+            else:
+                s = bm25_f64(tfs, lengths_from_bytes_f64(lens), t, d, df)
+            return ids, s * float(scorer.boost)
         if scorer.similarity == dsl.TFIDF:
             s = tfidf_f32(tfs, d, df)
         else:
@@ -397,49 +476,34 @@ class LocalSearcher:
         s = (s * np.float32(scorer.boost)).astype(np.float64)
         return ids, s
 
-    def _prefix(self, q: dsl.Prefix) -> Frame:
-        return self._multiterm(q.field,
-                               lambda t: t.startswith(q.prefix),
-                               q.scorer)
+    def _multiterm(self, q) -> Frame:
+        """MultiTerm (prefix, wildcard, regexp, fuzzy): per-doc Avg
+        over the matched dictionary terms (score_function.rs:61-79).
 
-    def _selector(self, q) -> Frame:
-        """Wildcard / Regexp / Fuzzy over the in-memory dictionary —
-        the same match predicates the distributed engine's
-        selector_stats applies (query/engine.py)."""
-        import re
-        from .engine import editdist_leq, wildcard_regex
-        if isinstance(q, dsl.Wildcard):
-            rx = re.compile(wildcard_regex(q.pattern)[0])
-            return self._multiterm(
-                q.field, lambda t: rx.match(t) is not None, q.scorer)
-        if isinstance(q, dsl.Regexp):
-            rx = re.compile("^(?:" + q.pattern + ")$")
-            return self._multiterm(
-                q.field, lambda t: rx.match(t) is not None, q.scorer)
-        hint = q.term[:q.prefix_length]
-        return self._multiterm(
-            q.field,
-            lambda t: t.startswith(hint)
-            and editdist_leq(t, q.term, q.fuzziness), q.scorer)
-
-    def _multiterm(self, field: str, match_fn, scorer) -> Frame:
-        matched = [k for k in self._dict_keys() if k[0] == field
-                   and match_fn(k[1])]
+        The Avg divisor counts matches in the GLOBAL term dictionary
+        (all fields; term_dictionary.rs:78-85) — out-of-field terms
+        contribute 0 to every doc but still count.  A shard must not
+        use its local dictionary for it, or scores would depend on
+        the shard split: the injected ``selectors`` (divisor and
+        matched terms, enumerated once for the whole index) or
+        ``global_terms`` keep it global."""
+        if self._selectors is not None:
+            n_dict, terms = self._selectors[q]
+            matched = [(q.field, t) for t in terms]
+        else:
+            from .engine import selector_match
+            match_fn, _ = selector_match(q)
+            matched = [k for k in self._dict_keys() if k[0] == q.field
+                       and match_fn(k[1])]
+            if self._global_terms is not None:
+                n_dict = sum(1 for t in self._global_terms if match_fn(t))
+            else:
+                n_dict = len({t for _, t in self._dict_keys()
+                              if match_fn(t)})
         if not matched:
             return _EMPTY
-        # Avg divisor = matches in the GLOBAL term dictionary (all
-        # fields; term_dictionary.rs:78-85) — out-of-field terms
-        # contribute 0 to every doc but still count.  Under sharding
-        # the injected index-wide term list keeps the divisor global
-        # (a shard's local dictionary would make scores depend on the
-        # shard split).
-        if self._global_terms is not None:
-            n_dict = sum(1 for t in self._global_terms if match_fn(t))
-        else:
-            n_dict = len({t for _, t in self._dict_keys()
-                          if match_fn(t)})
-        frames = [self._term(f, t, scorer) for f, t in matched]
-        ids, s = self._sum_frames(frames)
+        ids, s = self._sum_frames(
+            [self._term(f, t, q.scorer) for f, t in matched])
         return ids, s / float(n_dict)
 
     @staticmethod
@@ -458,10 +522,9 @@ class LocalSearcher:
             return ("none", None)
         if isinstance(q, dsl.Term):
             return ("df", self._term(q.field, q.term, q.scorer))
-        if isinstance(q, dsl.Prefix):
-            return ("df", self._prefix(q))
-        if isinstance(q, (dsl.Wildcard, dsl.Regexp, dsl.Fuzzy)):
-            return ("df", self._selector(q))
+        if isinstance(q, (dsl.Prefix, dsl.Wildcard, dsl.Regexp,
+                          dsl.Fuzzy)):
+            return ("df", self._multiterm(q))
         if isinstance(q, dsl.Nested):
             return ("df", self._nested_frame(q))
         if isinstance(q, dsl.Exists):
@@ -519,8 +582,7 @@ class LocalSearcher:
 
     def inner_hits(self, node: dsl.Nested,
                    root_ids: List[int]) -> Dict[int, List[dict]]:
-        """Serving-native ES inner_hits (engine._inner_hits mirror,
-        zero Spark jobs): per ROOT doc_id, the node's top matching
+        """ES inner_hits: per ROOT doc_id, the node's top matching
         child rows — synthetic key, array offset, score, subfield
         values — ranked (score desc, doc_id asc), sliced
         [from, from+size).  Child metadata loads lazily per path from
@@ -600,26 +662,26 @@ class LocalSearcher:
 
     def _exists_ids(self, field: str) -> np.ndarray:
         """Sorted doc_ids whose stored ``field`` is present — non-null
-        and, for list columns, non-empty (engine._exists_docset
-        mirror).  One lazy column-pruned pyarrow read per field,
-        cached; unknown fields (never stored) match nothing."""
+        and, for list columns, non-empty.  One lazy column-pruned
+        pyarrow read per field, cached; unknown fields (never stored)
+        match nothing, and so do the rows of a job whose docs file
+        predates the column."""
         cache = getattr(self, "_exists_cache", None)
         if cache is None:
             cache = self._exists_cache = {}
         got = cache.get(field)
         if got is not None:
             return got
-        import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
+        import pyarrow.dataset as pds
         known = ({self.config.key_col} | set(self.config.fields)
                  | set(self.config.stored))
-        if field not in known or not self._docs_dirs:
-            ids = np.empty(0, dtype=np.int64)
-        else:
-            tbl = pa.concat_tables([
-                pq.read_table(d, columns=["doc_id", field])
-                for d in self._docs_dirs])
+        parts = [np.empty(0, dtype=np.int64)]
+        for d in (self._docs_dirs if field in known else []):
+            dset = pds.dataset(d, format="parquet")
+            if field not in dset.schema.names:
+                continue
+            tbl = dset.to_table(columns=["doc_id", field])
             col = tbl.column(field)
             if pa.types.is_list(col.type) \
                     or pa.types.is_large_list(col.type):
@@ -628,18 +690,19 @@ class LocalSearcher:
             else:
                 mask = pc.is_valid(col)
             m = mask.combine_chunks().to_numpy(zero_copy_only=False)
-            ids = np.sort(tbl.column("doc_id").to_numpy()[m])
+            parts.append(tbl.column("doc_id").to_numpy()[m])
+        ids = np.sort(np.concatenate(parts))
         cache[field] = ids
         return ids
 
     def _nested_frame(self, q: dsl.Nested) -> Frame:
-        """ES nested query (engine._score_nested mirror): evaluate
-        the inner query over the path's CHILD rows — universe swapped
-        so inner match_all / root negations range over array elements
-        — keep live matched children, fold child scores to parents
-        per score_mode through the preloaded child→parent arrays.
-        A numpy group-by replaces the Spark engine's key join; the
-        output frame is parent-sorted (np.unique)."""
+        """ES nested query: evaluate the inner query over the path's
+        CHILD rows — universe swapped so inner match_all / root
+        negations range over array elements — keep live matched
+        children, fold child scores to parents per score_mode through
+        the preloaded child→parent arrays (a numpy group-by in place
+        of Lucene's block join).  The output frame is parent-sorted
+        (np.unique)."""
         from ..nested import nested_parent_path as _npp
         ctxp = self._nested_context
         if ctxp is not None and not q.path.startswith(ctxp + "."):
@@ -748,19 +811,25 @@ class LocalSearcher:
         return (uni, np.full(uni.size, float(val)))
 
 
-def load_global_dict(index_dir: str
+def load_global_dict(index_dir: str, jobs: Optional[List[int]] = None
                      ) -> Tuple[List[str], Dict[Tuple[str, str], int]]:
     """(distinct terms across all fields, (field, term) → global df)
-    from the term_dict sidecars — a narrow columnar read, small next
-    to postings.  Falls back to the postings block metadata for
-    legacy indexes.  These are the two score inputs that must stay
+    over ``jobs`` (default: every committed job) from the term_dict
+    sidecars — a narrow columnar read, small next to postings.  Falls
+    back to the postings block metadata when a job lacks its sidecar
+    (legacy indexes).  These are the two score inputs that must stay
     index-wide when serving is document-sharded."""
+    import os
     layout = IndexLayout(index_dir)
-    dirs = layout.committed_dirs("term_dict")
-    df_col = "df"
-    if not dirs:
-        dirs = layout.committed_dirs("postings")
-        df_col = "df_block"
+    if jobs is None:
+        jobs = layout.completed_jobs_local()
+    jobs = [j for j in jobs
+            if os.path.isdir(layout.job_dir("postings", j))]
+    table, df_col = "term_dict", "df"
+    if not all(os.path.isdir(layout.job_dir("term_dict", j))
+               for j in jobs):
+        table, df_col = "postings", "df_block"
+    dirs = [layout.job_dir(table, j) for j in jobs]
     if not dirs:
         return [], {}
     tbl = pa.concat_tables([
@@ -797,34 +866,56 @@ class ShardedSearcher:
     ``shards`` groups job ids per shard (default one shard per job);
     in a real deployment each group would live in its own serving
     process — here they share one process, which is the same math.
+    Spark-mode search places the same per-job evaluation in one Spark
+    task per shard (query/engine.py).
     """
 
     def __init__(self, index_dir: str,
                  shards: Optional[List[List[int]]] = None,
                  lazy: bool = False):
         layout = IndexLayout(index_dir)
-        jobs = layout.completed_jobs_local()
+        self.config = layout.read_config()
+        if self.config.nested_paths and not self.config.nested_colocated:
+            raise ValueError(
+                "this nested-type index predates parent-colocated "
+                "bucketing; rebuild it to serve job-restricted "
+                "shards, or use the whole-index LocalSearcher / "
+                "mode='spark'")
+        snap = layout.snapshot()
         if shards is None:
-            shards = [[j] for j in jobs]
-        gterms, gdf = load_global_dict(index_dir)
-        self.shards = [LocalSearcher(index_dir, jobs=js,
-                                     global_terms=gterms,
-                                     global_df=gdf, lazy=lazy)
-                       for js in shards]
+            shards = [[j] for j in snap.jobs]
+        gterms, gdf = load_global_dict(index_dir, list(snap.jobs))
+        self.registry = analysis_registry(self.config)
+        self.shards = [LocalSearcher.pinned(
+            index_dir, self.config, snap,
+            sorted(set(js) & set(snap.jobs)), lazy=lazy,
+            global_terms=gterms, global_df=gdf) for js in shards]
+
+    def parse(self, query_json: dict) -> dsl.Query:
+        return parse_query(self.config, self.registry, query_json)
 
     def search(self, query_json: dict, size: int = 10,
                from_: int = 0) -> List[Tuple[int, float]]:
+        q = self.parse(query_json)
         k = from_ + size
         # any doc in the global top-k is in its own shard's top-k
         # under the same deterministic tie order
         cand: List[Tuple[int, float]] = []
         for s in self.shards:
-            cand.extend(s.search(query_json, size=k, from_=0))
+            cand.extend(s.top(q, k))
         cand.sort(key=lambda t: (-t[1], t[0]))
         return cand[from_:k]
 
+    def matches(self, q: dsl.Query) -> Frame:
+        """Every live public match of ``q`` over all shards (shards
+        hold disjoint documents, so this is a concatenation)."""
+        frames = [s.matches(q) for s in self.shards] or [_EMPTY]
+        return (np.concatenate([f[0] for f in frames]),
+                np.concatenate([f[1] for f in frames]))
+
     def count(self, query_json: Optional[dict] = None) -> int:
-        return sum(s.count(query_json) for s in self.shards)
+        q = dsl.All() if query_json is None else self.parse(query_json)
+        return int(self.matches(q)[0].size)
 
     def inner_hits(self, node: "dsl.Nested",
                    root_ids: List[int]) -> Dict[int, List[dict]]:

@@ -8,6 +8,7 @@ compare like for like.
 
 from __future__ import annotations
 
+import itertools
 import os
 import shutil
 
@@ -15,6 +16,7 @@ import pytest
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 N_TEST_DOCS = 200
+_JOB_GROUPS = itertools.count()     # Spark job-group names stay unique
 
 
 @pytest.fixture(scope="session")
@@ -48,6 +50,25 @@ def sql_plans(spark):
     seen = {e.executionId() for e in _execs()}
     return lambda: [e.physicalPlanDescription() for e in _execs()
                     if e.executionId() not in seen]
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """A callable running ``fn()`` in its own Spark job group and
+    returning ``(fn's result, the number of Spark jobs it ran)``."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(fn):
+        group = f"spark-jobs-{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -5,8 +5,6 @@ combinators).  Top-k doc_ids must be identical in order; scores must
 agree to f32 ULP tolerance.  Counts (the _count path, scoring elided)
 must be exact."""
 
-import re
-
 import numpy as np
 import pytest
 
@@ -89,19 +87,19 @@ def test_hits_join_keys(engine):
     {"dis_max": {"queries": [{"term": {"text": "zzzzunseen"}},
                              {"term": {"lang": "qqqqunseen"}}]}},
 ], ids=["and_one_absent", "or_all_absent", "dis_max_all_absent"])
-def test_absent_term_folds_to_empty_without_postings_scan(engine, query):
+def test_absent_term_folds_to_empty_without_postings_scan(engine, spark_jobs,
+                                                          query):
     """Empty constant folding (boolean_query.rs:131-321): a conjunction
     with a term the dictionary lacks, or a disjunction of only such
-    terms, returns no hits without scanning a posting block."""
-    top = engine.search(query, size=10)
-    assert "FileScan" not in top._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert top.collect() == []
-    # the plan probe is live: a present conjunction does scan postings
-    present = engine.search({"match": {"text": {"query": "spark query",
-                                                "operator": "and"}}})
-    assert "FileScan" in present._jdf.queryExecution() \
-        .executedPlan().toString()
+    terms, returns no hits with zero Spark jobs, so no posting block
+    is read."""
+    rows, jobs = spark_jobs(lambda: engine.search(query, size=10).collect())
+    assert rows == [] and jobs == 0
+    # the probe is live: a present conjunction runs the shard job
+    rows, jobs = spark_jobs(lambda: engine.search(
+        {"match": {"text": {"query": "spark query",
+                            "operator": "and"}}}).collect())
+    assert rows and jobs == 1
 
 
 @pytest.mark.parametrize("query", [
@@ -110,17 +108,16 @@ def test_absent_term_folds_to_empty_without_postings_scan(engine, query):
 ], ids=["and_one_absent", "or_all_absent"])
 def test_absent_term_count_folds_without_postings_scan(engine, sql_plans,
                                                        query):
-    """The count path (`_docset`) folds the same way: 0, and not one
-    SQL execution, so no postings scan."""
+    """The count path folds the same way: 0, and not one SQL
+    execution, so no postings read."""
     assert engine.count(query) == 0
     assert sql_plans() == []
-    # the probe is live: a present conjunction's count scans postings
+    # the probe is live: a present conjunction's count runs the one
+    # shard-evaluator execution, whose tasks read the postings
     assert engine.count({"match": {"text": {"query": "spark query",
                                             "operator": "and"}}}) > 0
     plans = sql_plans()
-    assert plans and all(re.search(r"Scan parquet.*\n(?:.*\n)*?"
-                                   r"Location: .*/postings", p)
-                         for p in plans), plans
+    assert len(plans) == 1 and "MapInArrow" in plans[0], plans
 
 
 @pytest.fixture(scope="module")
@@ -193,89 +190,3 @@ def test_fused_multiterm_pruning_matches_full_eval(spark, many_block_index):
         {"match": {"text": {"query": "the data", "operator": "and"}}},
         {"multi_match": {"query": "the data", "fields": ["text", "lang"]}},
     ])
-
-
-def test_nested_fused_combine_matches_generic(engine):
-    """Two-level fused decode (multi_match: DisMax over per-field
-    Disjunctions in ONE decode job) must equal the recursive
-    per-group evaluation exactly — ids AND scores."""
-    queries = [
-        {"multi_match": {"query": "spark merge", "fields": ["text^2",
-                                                            "lang"]}},
-        {"multi_match": {"query": "table scan", "fields": ["text", "lang"],
-                         "operator": "and"}},
-    ]
-    for q in queries:
-        parsed = engine.parse(q)
-        assert engine._nested_groups(parsed.queries) is not None, q
-        a = [(r.doc_id, r.score) for r in
-             engine.search(q, size=15).collect()]
-        bak = engine._nested_groups
-        engine._nested_groups = lambda ch: None
-        try:
-            b = [(r.doc_id, r.score) for r in
-                 engine.search(q, size=15).collect()]
-        finally:
-            engine._nested_groups = bak
-        assert a == b and len(a) > 0, q
-
-
-def test_fused_filter_matches_generic(engine):
-    """Filter/Exclude over Term trees must produce the same ids and
-    scores through the one-job fused decode (filter terms ride along
-    as presence predicates) as through the generic
-    docset-plus-semi-join path."""
-    queries = [
-        {"filtered": {"query": {"match": {"text": "spark query"}},
-                      "filter": {"term": {"lang": "en"}}}},
-        {"filtered": {"query": {"term": {"text": "spark"}},
-                      "filter": {"terms": {"lang": ["en", "de"]}}}},
-        {"filtered": {"query": {"match": {"text": {"query": "table scan",
-                                                   "operator": "and"}}},
-                      "filter": {"term": {"lang": "en"}}}},
-        {"filtered": {"query": {"dis_max": {"queries": [
-            {"term": {"text": "spark"}}, {"term": {"text": "merge"}}]}},
-            "filter": {"term": {"lang": "en"}}}},
-    ]
-    for q in queries:
-        parsed = engine.parse(q)
-        assert engine._fused_filter(parsed.query, parsed.filter,
-                                    anti=False) is not None, q
-        a = [(r.doc_id, r.score) for r in engine.search(q, size=20).collect()]
-        bak = engine._fused_filter
-        engine._fused_filter = lambda *args, **kw: None
-        try:
-            b = [(r.doc_id, r.score) for r in
-                 engine.search(q, size=20).collect()]
-        finally:
-            engine._fused_filter = bak
-        assert a == b and len(a) > 0, q
-
-
-def test_fused_exclude_matches_generic(engine):
-    import rusticsearch_spark.query.dsl as dsl_mod
-    q = {"and": [{"match": {"text": "spark query"}},
-                 {"not": {"term": {"lang": "de"}}}]}
-    # the 'and' wrapper isn't itself the Exclude — drive _score directly
-    parsed = engine.parse({"match": {"text": "spark query"}})
-    excl = dsl_mod.Exclude(parsed, dsl_mod.Term("lang", "de"))
-    fused = engine._fused_filter(excl.query, excl.exclude, anti=True)
-    assert fused is not None
-    a = sorted((r.doc_id, round(r.score, 6)) for r in
-               engine._materialize(("df", fused)).collect())
-    bak = engine._fused_filter
-    engine._fused_filter = lambda *args, **kw: None
-    try:
-        b = sorted((r.doc_id, round(r.score, 6)) for r in
-                   engine._materialize(engine._score(excl)).collect())
-    finally:
-        engine._fused_filter = bak
-    assert a == b and len(a) > 0
-
-
-def test_fused_filter_declines_shared_leaf(engine):
-    """A term appearing in both branches must fall back (the fused
-    frame cannot hold one leaf twice)."""
-    import rusticsearch_spark.query.dsl as dsl_mod
-    t = dsl_mod.Term("text", "spark")
-    assert engine._fused_filter(t, t, anti=False) is None

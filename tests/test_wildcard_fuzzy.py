@@ -5,8 +5,9 @@ The reference DECLARES these selectors and implements only Prefix
 they reuse the MultiTerm Avg machinery with terms enumerated from
 the driver-side dictionary sidecar.  Contracts tested:
 
-* the dictionary path equals the legacy Spark-side fallback
-  (rlike / levenshtein over block metadata) exactly;
+* the terms the driver enumerates from the dictionary equal Spark's
+  own rlike / levenshtein over the term_dict parquet, and spark-mode
+  scores equal mode="local";
 * `editdist_leq` agrees with Spark's `F.levenshtein` (which is the
   DuckDB oracle's function too) on a generated sample;
 * enumeration is bounded: `selector_stats` raises past max_terms;
@@ -44,33 +45,39 @@ def test_editdist_agrees_with_spark_levenshtein(spark):
             assert editdist_leq(r.a, r.b, k) == (r.d <= k), (r.a, r.b, k)
 
 
-def test_wildcard_dictionary_path_matches_legacy(engine):
-    q = {"wildcard": {"text": "s*a*"}}
+def _assert_enumeration_independent(spark, engine, index_dir, q, pred):
+    """The selector's dictionary-enumerated terms equal ``pred`` (Spark
+    SQL) over the term_dict parquet: the query-field matches, and the
+    all-field match count that divides the Avg.  Spark-mode scores
+    equal mode="local"."""
+    node = engine.parse(q)
+    n, terms = engine._stats(node).selectors[node]
+    td = spark.read.parquet(index_dir + "/term_dict").where(pred)
+    want = sorted(r.term for r in
+                  td.where(F.col("field") == "text").select("term")
+                  .distinct().collect())
+    assert list(terms) == want and want
+    assert n == td.select("term").distinct().count()
+    a = sorted((r.doc_id, r.score) for r in
+               engine.search(q, size=500).collect())
+    local = SearchEngine(spark, index_dir, mode="local")
+    b = sorted((r.doc_id, r.score) for r in
+               local.search(q, size=500).collect())
+    assert a == b and len(a) > 0
+
+
+def test_wildcard_dictionary_path_matches_legacy(spark, engine, index_dir):
     assert engine.dict_reader is not None
-    a = sorted((r.doc_id, round(r.score, 5)) for r in
-               engine.search(q, size=500).collect())
-    bak = engine.dict_reader
-    engine.dict_reader = None
-    try:
-        b = sorted((r.doc_id, round(r.score, 5)) for r in
-                   engine.search(q, size=500).collect())
-    finally:
-        engine.dict_reader = bak
-    assert a == b and len(a) > 0
+    _assert_enumeration_independent(
+        spark, engine, index_dir, {"wildcard": {"text": "s*a*"}},
+        F.col("term").rlike("^s.*a.*$"))
 
 
-def test_fuzzy_dictionary_path_matches_legacy(engine):
-    q = {"fuzzy": {"text": {"value": "part", "fuzziness": 2}}}
-    a = sorted((r.doc_id, round(r.score, 5)) for r in
-               engine.search(q, size=500).collect())
-    bak = engine.dict_reader
-    engine.dict_reader = None
-    try:
-        b = sorted((r.doc_id, round(r.score, 5)) for r in
-                   engine.search(q, size=500).collect())
-    finally:
-        engine.dict_reader = bak
-    assert a == b and len(a) > 0
+def test_fuzzy_dictionary_path_matches_legacy(spark, engine, index_dir):
+    _assert_enumeration_independent(
+        spark, engine, index_dir,
+        {"fuzzy": {"text": {"value": "part", "fuzziness": 2}}},
+        F.levenshtein(F.col("term"), F.lit("part")) <= 2)
 
 
 def test_fuzzy_zero_edits_equals_term_docset(engine):
@@ -130,18 +137,10 @@ def test_regex_literal_prefix():
     assert regex_literal_prefix("ab{2}") == "a"
 
 
-def test_regexp_dictionary_path_matches_legacy(engine):
-    q = {"regexp": {"text": "m[ae]r.*"}}
-    a = sorted((r.doc_id, round(r.score, 5)) for r in
-               engine.search(q, size=500).collect())
-    bak = engine.dict_reader
-    engine.dict_reader = None
-    try:
-        b = sorted((r.doc_id, round(r.score, 5)) for r in
-                   engine.search(q, size=500).collect())
-    finally:
-        engine.dict_reader = bak
-    assert a == b and len(a) > 0
+def test_regexp_dictionary_path_matches_legacy(spark, engine, index_dir):
+    _assert_enumeration_independent(
+        spark, engine, index_dir, {"regexp": {"text": "m[ae]r.*"}},
+        F.col("term").rlike("^(?:m[ae]r.*)$"))
 
 
 def test_unanchored_wildcard_distributes_enumeration(engine):
